@@ -11,9 +11,10 @@ SparkSession:
   ``XxHash64`` expression (XXH64, seed chaining across columns; string cols
   hash their UTF-8 bytes, long cols their 8-byte LE value). Pinned against
   Spark output in ``tests/test_functions.py::test_xxhash64_replica``.
-* ``band_table`` — replays ``pipeline.featurize_records``'s shingle-hash +
-  MinHash + band-hash derivation (sharing ``simfns._min_perm`` — the same
-  modmul code Spark executes) for a transcripts DataFrame.
+* ``band_table`` — replays the engine's one signature kernel,
+  ``functions.simfns.shingle_hashes`` → ``minhash`` → ``band_keys`` (as
+  called by ``pipeline.featurize_records``; sharing ``simfns._min_perm`` —
+  the same modmul code Spark executes) for a transcripts DataFrame.
 
 This is NOT the engine (the engine is the Spark path); it is test/oracle
 scaffolding, deliberately slow-and-simple.
@@ -229,10 +230,11 @@ def band_table(
     transcripts: pd.DataFrame, lsh_bands: int = 24, seed: int = 42
 ) -> pd.DataFrame:
     """(rid, band_idx, band_hash) rows replaying the engine's LSH banding:
-    doc → ordered token hashes → 3-token shingle hash-combines (mod 2^32) →
-    MinHash (``simfns._min_perm`` — the very code Spark runs) → band hash =
+    doc → ordered token hashes → 3-token shingle hash-combines
+    (``simfns.shingle_hashes``; folded mod 2^32 as ``simfns.minhash`` does)
+    → MinHash (``simfns._min_perm`` — the very code Spark runs) → band hash =
     xxhash64 of the single-element signature slice cast to string
-    (``operators/blocking.lsh_band_pairs``)."""
+    (``simfns.band_keys`` with one row per band)."""
     from mapping_analysis_spark.functions.simfns import MERSENNE_P, _min_perm
 
     rng = np.random.default_rng(seed)

@@ -150,12 +150,9 @@ def trigram_cosine_simmetrics(a: pd.Series, b: pd.Series) -> pd.Series:
         x, y = av[i], bv[i]
         if x is None or y is None:
             continue
-        if x == "" or y == "":
-            # simmetrics: two empty multisets compare 1.0, one empty 0.0
-            # (the padded-trigram math gives the same: {'###':2} vs {'###':2}
-            # → 1.0; '###' never occurs in a non-empty string's grams → 0.0)
-            out[i] = 1.0 if x == "" and y == "" else 0.0
-            continue
+        # "" pads to '####' = {'###': 2}, which a non-empty string's padded
+        # grams can share (e.g. '#' → '#####'), so empties take the exact
+        # Counter math too
         for s in (x, y):
             if s not in tri:
                 c = _trigrams(s)

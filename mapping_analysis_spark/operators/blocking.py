@@ -17,8 +17,8 @@ Re-creates the reference's blocking strategies (enum at
 * ``lsh_band_pairs`` — LSH_BLOCKING analogue (MinHash banding instead of the
   reference's Bloom-filter bit sampling,
   ``model/functions/blocking/lsh/LshCandidateCreator.java:23-29``):
-  posexplode signature bands → groupBy (band_idx, band_hash) → intra-bucket
-  pairs → dropDuplicates.
+  posexplode the signature's ``functions.simfns.band_keys`` → self-join on
+  (band_idx, band_hash) → dropDuplicates.
 
 All emitted pair frames have columns ``a_<col>, b_<col>`` for every record
 column, ready for similarity scoring.
@@ -26,10 +26,11 @@ column, ready for similarity scoring.
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+
+from mapping_analysis_spark.functions.simfns import band_keys
 
 
 def _pair_schema(records: DataFrame) -> StructType:
@@ -172,22 +173,12 @@ def lsh_band_pairs(
     never drop a qualifying pair, and on low-entropy inputs (hot-bucket
     worst case) it cuts the pre-dedup pair volume before the shuffle.
     """
-    n = bands * rows_per_band
-    extra = [F.col(size_col)] if size_col else []
     banded = records.select(
         F.col(id_col),
-        *extra,
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.slice(F.col(sig_col), i * rows_per_band + 1, rows_per_band),
-            )
-        ).alias("band_idx", "band_sig"),
-    ).select(
-        id_col,
-        *([size_col] if size_col else []),
-        "band_idx",
-        F.xxhash64(F.col("band_sig").cast("string")).alias("band_hash"),
+        *([F.col(size_col)] if size_col else []),
+        F.posexplode(band_keys(sig_col, bands, rows_per_band)).alias(
+            "band_idx", "band_hash"
+        ),
     )
     # pin the bucket-join parallelism: the banded table compresses to a few
     # MB, so AQE coalesces the join to ~4 tasks while the join itself fans
@@ -212,7 +203,6 @@ def lsh_band_pairs(
         .select(F.col(f"a.{id_col}").alias(f"a_{id_col}"), F.col(f"b.{id_col}").alias(f"b_{id_col}"))
         .dropDuplicates([f"a_{id_col}", f"b_{id_col}"])
     )
-    _ = n
     return pairs
 
 

@@ -171,7 +171,9 @@ def large_star_small_star(
 
     large-star: every node connects its larger neighbors to its min neighbor;
     small-star: every node connects its smaller-or-equal neighbors to the min.
-    Fixpoint → every node points at its component's min id.
+    Fixpoint → every node points at its component's min id. Raises
+    ``RuntimeError`` if no round reproduces its input edge set within
+    ``max_iter`` rounds: unconverged labels would silently split components.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
         F.col("u") != F.col("v")
@@ -221,6 +223,10 @@ def large_star_small_star(
         if sig == prev_sig:
             break
         prev_sig = sig
+    else:
+        raise RuntimeError(
+            f"large_star_small_star did not converge in max_iter={max_iter} rounds"
+        )
     comp = e.select(F.col("u").alias("node"), F.col("v").alias("comp"))
     roots = comp.select(F.col("comp").alias("node"), F.col("comp"))
     return comp.union(roots).groupBy("node").agg(F.min("comp").alias("comp"))

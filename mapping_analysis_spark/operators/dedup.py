@@ -10,10 +10,14 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mapping_analysis_spark.functions.simfns import make_minhash_udf, make_simhash_udf
+from mapping_analysis_spark.functions.simfns import (
+    make_simhash_udf,
+    minhash,
+    shingle_hashes,
+)
 from mapping_analysis_spark.functions.text import token_set_jaccard
 from mapping_analysis_spark.operators.blocking import lsh_band_pairs
 
@@ -58,16 +62,22 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def word_shingles(df: DataFrame, text_col: str = "text", width: int = 3, out: str = "sg") -> DataFrame:
-    """Distinct word w-shingles as a native expression (no Python)."""
-    tk = F.split(F.col(text_col), " ")
-    # try_element_at: short docs yield one truncated shingle instead of an
-    # ANSI out-of-bounds error (concat_ws skips the NULLs).
-    sh = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.lit(1), F.size(tk) - (width - 1))),
-        lambda i: F.concat_ws(" ", *[F.try_element_at(tk, i + j) for j in range(width)]),
+def word_shingles(tokens, width: int = 3) -> Column:
+    """Distinct word ``width``-shingles (strings) of an ordered token array
+    — the engine's one Catalyst string shingler, no Python. A doc shorter
+    than ``width`` tokens yields one truncated shingle: ``try_element_at``
+    returns NULL out of range (no ANSI error) and ``concat_ws`` skips it.
+
+    Pass a *bound column* (``withColumn("_tk", split(...))`` first), for the
+    reason given in ``functions.simfns.shingle_hashes``."""
+    return F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), F.greatest(F.lit(1), F.size(tokens) - (width - 1))),
+            lambda i: F.concat_ws(
+                " ", *[F.try_element_at(tokens, i + j) for j in range(width)]
+            ),
+        )
     )
-    return df.withColumn(out, F.array_distinct(sh))
 
 
 def _py_shingles(text: str, width: int) -> set:
@@ -399,12 +409,11 @@ def minhash_lsh_dedup(
     (1 - threshold^rows_per_band)^bands.
 
     No string shingles are ever materialized on the hot path: the shingle
-    universe is hashed directly as ``xxhash64`` of ``shingle_width``
-    consecutive *token hashes* (out-of-range positions are NULL, which
-    Spark's hash expressions skip — exactly mirroring the truncated-shingle
-    semantics of ``word_shingles``' concat_ws). One checkpointed table of
-    distinct int64 shingle-hash arrays feeds the MinHash signature AND the
-    hashed verify stage.
+    universe is hashed directly from *token hashes* by the shared
+    ``shingle_hashes`` → ``minhash`` → ``band_keys`` kernel
+    (``functions.simfns``), the same one the batch pipeline and the
+    streaming job use. One checkpointed table of distinct int64 shingle-hash
+    arrays feeds the MinHash signature AND the hashed verify stage.
 
     ``rows_per_band > 1`` (the default call shape is 2 rows x ``bands``
     bands) is what keeps the candidate set output-shaped on corpora where
@@ -451,41 +460,21 @@ def minhash_lsh_dedup(
             df, text_col, id_col, shingle_width, threshold, vocab
         )
     txt = df.select(F.col(id_col).cast("string").alias("rid"), F.col(text_col).alias("_txt"))
-    # distinct int64 shingle hashes straight from token hashes — the _th
-    # binding via withColumn matters: an inlined split() is re-evaluated per
-    # element_at (O(n^2) per doc, see pipeline.doc_shingles)
-    feat = txt.withColumn(
-        "_th", F.transform(F.split(F.col("_txt"), " "), lambda tkn: F.xxhash64(tkn))
-    )
+    # distinct int64 shingle hashes straight from token hashes (_th bound
+    # first — see shingle_hashes)
     feat = (
-        feat.withColumn(
-            "hs",
-            F.array_distinct(
-                F.transform(
-                    F.sequence(
-                        F.lit(1),
-                        F.greatest(F.lit(1), F.size("_th") - (shingle_width - 1)),
-                    ),
-                    lambda i: F.xxhash64(
-                        *[
-                            F.try_element_at(F.col("_th"), i + j)
-                            for j in range(shingle_width)
-                        ]
-                    ),
-                )
-            ),
+        txt.withColumn(
+            "_th", F.transform(F.split(F.col("_txt"), " "), lambda tkn: F.xxhash64(tkn))
         )
+        .withColumn("hs", shingle_hashes(F.col("_th"), shingle_width))
         .select("rid", "hs")
         .localCheckpoint(eager=True)
     )
     small = n_docs <= BROADCAST_MAX_RECORDS
-    mh = make_minhash_udf(num_hashes=bands * rows_per_band, shingle_width=1)
     sig = feat.select(
         "rid",
         F.size("hs").alias("n_sg"),
-        mh(
-            F.transform(F.col("hs"), lambda h: F.pmod(h, F.lit(4294967296)))
-        ).alias("minhash"),
+        minhash(F.col("hs"), bands * rows_per_band).alias("minhash"),
     )
     # in-join exact size-ratio prune at ratio = threshold (Jaccard >= t
     # forces min/max >= t) — cuts the hot-bucket pair volume before the
@@ -528,24 +517,13 @@ def minhash_lsh_dedup(
     if small:
         a, b = F.broadcast(a), F.broadcast(b)
 
-    def sg_of(tk_col: str):
-        tk = F.col(tk_col)
-        return F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(F.lit(1), F.size(tk) - (shingle_width - 1))),
-                lambda i: F.concat_ws(
-                    " ", *[F.try_element_at(tk, i + j) for j in range(shingle_width)]
-                ),
-            )
-        )
-
     v = (
         survivors.join(a, "a_rid")
         .join(b, "b_rid")
         .withColumn("_atk", F.split(F.col("a_txt"), " "))
         .withColumn("_btk", F.split(F.col("b_txt"), " "))
-        .withColumn("a_sg", sg_of("_atk"))
-        .withColumn("b_sg", sg_of("_btk"))
+        .withColumn("a_sg", word_shingles(F.col("_atk"), shingle_width))
+        .withColumn("b_sg", word_shingles(F.col("_btk"), shingle_width))
         .withColumn("sim", token_set_jaccard(F.col("a_sg"), F.col("b_sg")))
         .filter(F.col("sim") >= threshold)
     )

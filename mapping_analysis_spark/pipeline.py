@@ -10,9 +10,10 @@ a declarative DataFrame plan:
 
     transcripts
       → conversation records (label = first-turn text, doc = full text)
-      → prefix blocking key                (Utils.getBlockingKey semantics)
-      → skew-salted candidate pair self-join (BlockSplit semantics)
-      → token-set Jaccard similarity >= threshold
+      → featurize: prefix blocking keys    (Utils.getBlockingKey semantics)
+                   + MinHash over word 3-shingles (functions.simfns kernel)
+      → candidates = stop-block-pruned prefix self-join ∪ LSH band join,
+        token-set Jaccard >= threshold scored inside the joins (match_edges)
       → connected components (min-id)      (GSAConnectedComponents semantics)
       → majority-vote representatives      (getFinalValue semantics)
 
@@ -25,18 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapping_analysis_spark.functions.text import (
-    blocking_key,
-    distinct_tokens,
-    normalize_text,
-    token_set_jaccard,
-)
-from mapping_analysis_spark.functions.simfns import make_minhash_udf
-from mapping_analysis_spark.operators.blocking import (
-    block_pairs,
-    lsh_band_pairs,
-    salted_block_pairs,
-)
+from mapping_analysis_spark.functions.simfns import minhash, shingle_hashes
+from mapping_analysis_spark.functions.text import blocking_key, normalize_text
+from mapping_analysis_spark.operators.blocking import lsh_band_pairs
 from mapping_analysis_spark.operators.clustering import (
     assign_cluster_ids,
     representatives,
@@ -46,10 +38,10 @@ from mapping_analysis_spark.operators.clustering import (
 # Jaccard tops out ~0.15, true pairs start ~0.46 (p01) — 0.35 separates with
 # wide margin (cf. the reference's measured per-domain cutoffs, e.g. 0.6 at
 # BasicEdgeSimilarityComputation.java:110). The LSH recall path bands MinHash
-# over word 2-shingles (false-pair 2-shingle Jaccard < 0.015, true p01 0.21):
-# with 24 bands × 1 row, miss prob at the weakest true pair is (1-0.21)^24 ≈
-# 0.4%, false-candidate prob ≈ 24×0.005 — subquadratic at scale because
-# random pairs almost never share a band.
+# over word 3-shingles, which are sequence-sensitive, so unrelated records
+# from a shared vocabulary do not collide (measured: false-pair 3-shingle
+# Jaccard 0.0000 at p99.9, true pairs from ~0.10) — subquadratic at scale
+# because random pairs almost never share a band.
 DEFAULT_THRESHOLD = 0.35
 DEFAULT_BLOCK_LENGTH = 4
 DEFAULT_LSH_BANDS = 24
@@ -58,11 +50,10 @@ DEFAULT_LSH_BANDS = 24
 # hits each turn independently, so a duplicate pair escapes all k keys with
 # prob ~(1-0.64)^k — at k=4 ≈ 1.7% — and the LSH path catches the rest.
 N_BLOCK_TURNS = 4
-DEFAULT_SHINGLE_WIDTH = 3
 # Stop-block pruning: blocks larger than this generate no prefix pairs (they
 # are head-of-Zipf stop-prefixes — at sf0.1 one 4-char prefix already holds
 # 6965 records = 24M pairs, quadratic death at 100 TB). Recall for records in
-# pruned blocks rides the LSH path (miss prob ~0.4%/pair). The reference's
+# pruned blocks rides the LSH path. The reference's
 # BlockSplit balances load *within* blocks; stop-block pruning bounds the
 # total — both are required at scale.
 DEFAULT_MAX_BLOCK_SIZE = 256
@@ -79,30 +70,6 @@ DEFAULT_MAX_BLOCK_SIZE = 256
 BROADCAST_MAX_RECORDS = 100_000
 
 
-def doc_shingles(tokens_in_order, width: int = DEFAULT_SHINGLE_WIDTH) -> "F.Column":  # type: ignore[name-defined]
-    """Distinct word w-shingles of an ordered token array (native expr).
-
-    The LSH feature: sequence-sensitive, so unrelated records from a shared
-    vocabulary do not collide (unigram MinHash degenerates when the token
-    universe is small relative to document length; measured on the seeded
-    corpus: false-pair 3-shingle Jaccard is 0.0000 at p99.9 while true pairs
-    start at ~0.10).
-
-    IMPORTANT: pass a *bound column* (e.g. ``withColumn("tk", split(...))``
-    first), not an inline ``split(...)`` expression — Catalyst inlines the
-    argument into every ``element_at``, turning shingling O(n²) per document
-    (measured 94 s vs 1.6 s on 25k conversations)."""
-    tk = tokens_in_order
-    # try_element_at: short docs yield one truncated shingle instead of an
-    # ANSI out-of-bounds error (concat_ws skips the NULLs).
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.lit(1), F.size(tk) - (width - 1))),
-            lambda i: F.concat_ws(" ", *[F.try_element_at(tk, i + j) for j in range(width)]),
-        )
-    )
-
-
 def block_keys_array(block_length: int = DEFAULT_BLOCK_LENGTH):
     """Column expr: the record's ``N_BLOCK_TURNS`` prefix keys as an array —
     '<k>:<prefix-of-normalized-early-turn-k>'. Requires the ``early`` column
@@ -114,13 +81,6 @@ def block_keys_array(block_length: int = DEFAULT_BLOCK_LENGTH):
             )
             for k in range(N_BLOCK_TURNS)
         ]
-    )
-
-
-def multi_block_keys(records: DataFrame, block_length: int = DEFAULT_BLOCK_LENGTH) -> DataFrame:
-    """Explode each record into (rid, source, bk) multi-key rows."""
-    return records.select(
-        "rid", "source", F.explode(block_keys_array(block_length)).alias("bk")
     )
 
 
@@ -180,9 +140,10 @@ def featurize_records(
     strings. Tokens are hashed to int64 JVM-side (collision odds 2^-64 per
     token pair are irrelevant to set sizes); tokens = split + drop empties is
     identical to distinct_tokens(doc) since normalize is idempotent, but ~2x
-    cheaper.
+    cheaper. The signature is the shared ``shingle_hashes`` → ``minhash``
+    kernel over word 3-shingles of those token hashes; the streaming job and
+    ``oracle_features.band_table`` derive the same signature and band keys.
     """
-    mh = make_minhash_udf(num_hashes=lsh_bands, shingle_width=1)
     rec = records.withColumn(
         "_th",  # ordered token hashes (duplicates kept — shingles need order)
         F.transform(
@@ -190,36 +151,14 @@ def featurize_records(
             lambda t: F.xxhash64(t),
         ),
     )
-    # shingle hash = hash-combine of 3 consecutive TOKEN hashes — numerically,
-    # no shingle strings are ever built (the concat_ws formulation spent ~3
-    # string ops per token in the hottest stage). Same distinctness
-    # semantics as hashing the string shingle; 32-bit range keeps the exact
-    # MinHash modmul in int64 (see functions/simfns._min_perm).
     rec = rec.withColumn("toks", F.array_distinct(F.col("_th")))
-    rec = rec.withColumn(
-        "_sg",
-        F.array_distinct(
-            F.transform(
-                F.sequence(
-                    F.lit(1), F.greatest(F.lit(1), F.size(F.col("_th")) - 2)
-                ),
-                lambda i: F.pmod(
-                    F.xxhash64(
-                        F.try_element_at(F.col("_th"), i),
-                        F.try_element_at(F.col("_th"), i + 1),
-                        F.try_element_at(F.col("_th"), i + 2),
-                    ),
-                    F.lit(4294967296),
-                ),
-            )
-        ),
-    ).drop("_th")
+    rec = rec.withColumn("_sg", shingle_hashes(F.col("_th"), 3)).drop("_th")
     rec = rec.select(
         "rid",
         "source",
         block_keys_array(block_length).alias("bks"),
         "toks",
-        mh(F.col("_sg")).alias("minhash"),
+        minhash(F.col("_sg"), lsh_bands).alias("minhash"),
     )
     # lazy: the first consumer (pruned_block_rows' eager checkpoint) is the
     # materializing action — one job computes both, later consumers hit the
@@ -243,73 +182,6 @@ def pruned_block_rows(
     ok_blocks = sizes.filter(F.col("_bn") <= max_block_size).select("bk")
     slim = blk.join(F.broadcast(ok_blocks), "bk", "left_semi")
     return slim.localCheckpoint(eager=True)
-
-
-def candidate_pairs(
-    records: DataFrame,
-    block_length: int = DEFAULT_BLOCK_LENGTH,
-    salted: bool = False,
-    cap: int = 64,
-    lsh_bands: int = DEFAULT_LSH_BANDS,
-    max_block_size: int = DEFAULT_MAX_BLOCK_SIZE,
-) -> DataFrame:
-    """Candidate id-pairs = prefix-block pairs ∪ MinHash-LSH band pairs,
-    cross-source only (IntraSourceLinkRemover semantics,
-    ``IntraSourceLinkRemover.java:43-57``), with token arrays joined back for
-    scoring.
-
-    The union mirrors the reference's strategy composition (IDF/LSH blocking
-    unioned with a standard-blocking fallback,
-    ``model/functions/merge/MergeExecution.java:239-269``): multi-turn prefix
-    keys are cheap, precise equi-joins; the MinHash-over-3-shingle bands
-    recover pairs whose early turns are all corrupted. Both paths are
-    record-local (stream-stable) and linear in candidate volume.
-
-    ``salted=False`` by default: stop-block pruning bounds every block at
-    ``max_block_size`` (≤ 33k pairs per block), which Catalyst+AQE handles in
-    one JVM self-join; the triangle-salted ``applyInPandas`` path
-    (BlockSplit semantics) remains for deployments that must keep oversized
-    blocks instead of pruning them.
-    """
-    rec = featurize_records(records, lsh_bands=max(lsh_bands, 1), block_length=block_length)
-    slim = pruned_block_rows(rec, max_block_size)
-    if salted:
-        bp = salted_block_pairs(slim, block_col="bk", cap=cap).select("a_rid", "b_rid")
-    else:
-        bp = block_pairs(slim, block_col="bk").select("a_rid", "b_rid")
-    id_pairs = bp
-    if lsh_bands:
-        sig = rec.select("rid", "minhash")
-        lp = lsh_band_pairs(sig, bands=lsh_bands, rows_per_band=1)
-        id_pairs = id_pairs.union(lp.select("a_rid", "b_rid"))
-    id_pairs = id_pairs.dropDuplicates(["a_rid", "b_rid"])
-    # Explicit repartition before the payload joins: AQE coalesces the thin
-    # (a_rid, b_rid) shuffle to a handful of partitions (~40 MB compressed),
-    # but the join fattens every row with ~1 KB token arrays — leaving the
-    # whole similarity stage on ~3 cores (measured 28 s stall at sf0.5). A
-    # user repartition pins the parallelism through the fat stages.
-    n_part = records.sparkSession.sparkContext.defaultParallelism * 2
-    a = rec.select(
-        F.col("rid").alias("a_rid"), F.col("source").alias("a_source"), F.col("toks").alias("a_toks")
-    ).hint("shuffle_hash")
-    b = rec.select(
-        F.col("rid").alias("b_rid"), F.col("source").alias("b_source"), F.col("toks").alias("b_toks")
-    ).hint("shuffle_hash")
-    return (
-        id_pairs.repartition(n_part, "a_rid")
-        .join(a, "a_rid")
-        .repartition(n_part, "b_rid")
-        .join(b, "b_rid")
-        .filter(F.col("a_source") != F.col("b_source"))
-    )
-
-
-def score_conversation_pairs(pairs: DataFrame) -> DataFrame:
-    """Token-set Jaccard over full conversation text (integer set sizes →
-    engine-deterministic doubles)."""
-    return pairs.withColumn(
-        "sim", token_set_jaccard(F.col("a_toks"), F.col("b_toks"))
-    ).drop("a_toks", "b_toks")
 
 
 def jaccard_ge(a_toks, b_toks, threshold: float):
@@ -340,7 +212,6 @@ def jaccard_ge(a_toks, b_toks, threshold: float):
 def match_edges(
     rec: DataFrame,
     threshold: float = DEFAULT_THRESHOLD,
-    block_length: int = DEFAULT_BLOCK_LENGTH,
     lsh_bands: int = DEFAULT_LSH_BANDS,
     max_block_size: int = DEFAULT_MAX_BLOCK_SIZE,
     n_records: int | None = None,
@@ -353,8 +224,8 @@ def match_edges(
     below ``BROADCAST_MAX_RECORDS`` every build side is broadcast (see the
     constant's rationale); above it the shuffle_hash plan runs unchanged.
 
-    Identical pair set to ``candidate_pairs`` + ``score`` + filter (the
-    score of a pair doesn't depend on which key produced it, so
+    Identical pair set to generating all candidates, deduping, then scoring
+    (the score of a pair doesn't depend on which key produced it, so
     score-then-dedup ≡ dedup-then-score), but a fundamentally cheaper plan:
     the block self-join carries token arrays through the join and computes
     Jaccard in the same stage, so the ~97% of pairs below threshold die
@@ -423,32 +294,16 @@ def match_conversations(
     transcripts: DataFrame,
     threshold: float = DEFAULT_THRESHOLD,
     block_length: int = DEFAULT_BLOCK_LENGTH,
-    salted: bool = False,
-    cap: int = 64,
 ) -> DataFrame:
     """Full batch pipeline → (conv_id, cluster_id); singletons keep own id.
-
-    ``salted=True`` routes pair generation through the triangle-salted
-    BLOCK_SPLIT path (kept for deployments that retain oversized blocks);
-    the default path scores in-join (see ``match_edges``).
-    """
-    rec0 = conversation_records(transcripts)
-    if salted:
-        pairs = candidate_pairs(rec0, block_length=block_length, salted=True, cap=cap)
-        scored = score_conversation_pairs(pairs)
-        edges = scored.filter(F.col("sim") >= F.lit(threshold)).select(
-            F.col("a_rid").alias("a"), F.col("b_rid").alias("b")
-        )
-    else:
-        rec = featurize_records(rec0)
-        n_rec = rec.count()  # materializes the checkpoint; drives broadcast gating
-        edges = match_edges(
-            rec, threshold=threshold, block_length=block_length, n_records=n_rec
-        )
-        rec0 = rec  # nodes come from the checkpoint — no transcript re-agg
+    Pairs are scored in-join (see ``match_edges``)."""
+    rec = featurize_records(conversation_records(transcripts), block_length=block_length)
+    n_rec = rec.count()  # materializes the checkpoint; drives broadcast gating
+    edges = match_edges(rec, threshold=threshold, n_records=n_rec)
     # materialize once: CC consumes the edge set twice (probe-collect + loop)
     edges = edges.localCheckpoint(eager=True)
-    nodes = rec0.select(F.col("rid").alias("conv_id"))
+    # nodes come from the checkpoint — no transcript re-agg
+    nodes = rec.select(F.col("rid").alias("conv_id"))
     return assign_cluster_ids(nodes, edges, "conv_id", edges_distinct=True)
 
 

@@ -72,6 +72,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from mapping_analysis_spark.functions.simfns import band_keys
 from mapping_analysis_spark.operators.clustering import connected_components
 from mapping_analysis_spark.pipeline import (
     DEFAULT_BLOCK_LENGTH,
@@ -245,24 +246,18 @@ class IncrementalClusteringJob:
 
         # 3. re-derive records for affected conversations only — identical
         # featurization to the batch pipeline (featurize_records), plus the
-        # per-record LSH band-hash array (band_hash = xxhash64 of the MinHash
-        # value, position = band index) stored ON the record so old postings
-        # are recoverable without scanning the posting lists.
+        # per-record LSH band keys (the batch band_keys encoding, position =
+        # band index) stored ON the record so old postings are recoverable
+        # without scanning the posting lists.
         recs_full = featurize_records(
             conversation_records(turns_aff),
             lsh_bands=self.lsh_bands,
             block_length=self.block_length,
         )
-        recs_full = (
-            recs_full.withColumn(
-                "bands",
-                F.transform(
-                    F.col("minhash"), lambda h: F.xxhash64(h.cast("string"))
-                ),
-            )
-            .select("rid", "source", "bks", "toks", "bands")
-            .localCheckpoint(eager=False)
-        )
+        recs_full = recs_full.select(
+            "rid", "source", "bks", "toks",
+            band_keys("minhash", self.lsh_bands).alias("bands"),
+        ).localCheckpoint(eager=False)
         self.records.upsert(recs_full, ["rid"], batch_id)
         _mark("records_upsert")
 

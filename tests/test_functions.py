@@ -233,7 +233,9 @@ def test_short_doc_shingle_parity(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     got = {
         r.doc_id: sorted(r.sg)
-        for r in word_shingles(df, "text", 3).select("doc_id", "sg").collect()
+        for r in df.withColumn("_tk", F.split("text", " "))
+        .select("doc_id", word_shingles(F.col("_tk"), 3).alias("sg"))
+        .collect()
     }
     con = _duckdb.connect()
     con.execute("CREATE TABLE documents(doc_id INT, text VARCHAR)")
@@ -286,16 +288,19 @@ def test_band_table_matches_spark(spark):
 
     from mapping_analysis_spark.data.oracle_features import band_table
     from mapping_analysis_spark.data.transcripts import ensure_transcripts
-    from mapping_analysis_spark.pipeline import conversation_records, featurize_records
+    from mapping_analysis_spark.functions.simfns import band_keys
+    from mapping_analysis_spark.pipeline import (
+        DEFAULT_LSH_BANDS,
+        conversation_records,
+        featurize_records,
+    )
 
     p = ensure_transcripts("/root/testdata/sf0.001")
     rec = featurize_records(conversation_records(spark.read.parquet(p)))
     got = (
         rec.select(
             "rid",
-            F.posexplode(
-                F.transform(F.col("minhash"), lambda h: F.xxhash64(F.array(h).cast("string")))
-            ).alias("band_idx", "band_hash"),
+            F.posexplode(band_keys("minhash", DEFAULT_LSH_BANDS)).alias("band_idx", "band_hash"),
         )
         .toPandas()
         .sort_values(["rid", "band_idx"])

@@ -77,6 +77,14 @@ def test_large_star_small_star_matches_label_prop(spark):
     assert c1 == c2
 
 
+def test_large_star_small_star_raises_when_not_converged(spark):
+    """An iteration cap reached before the fixpoint must raise, not return
+    labels that split a component."""
+    path = spark.createDataFrame([(i, i + 1) for i in range(64)], "a long, b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(path, driver_threshold=0, max_iter=1).collect()
+
+
 def test_max_both_mutual_best(spark):
     # r1's best is r2 (0.9) and r2's best is r1 → kept.
     # r3's best is r2 (0.8) but r2's best is r1 → dropped.

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 from itertools import combinations
 
-import pytest
 from pyspark.sql import functions as F
 
 from mapping_analysis_spark.pipeline import (
@@ -33,9 +32,8 @@ def test_conversation_records_shape(spark, transcripts_smoke):
         assert r["label"] == " ".join(r["label"].split())
 
 
-@pytest.mark.parametrize("salted", [True, False])
-def test_match_quality(spark, transcripts_smoke, salted):
-    assign = match_conversations(transcripts_smoke, threshold=0.6, salted=salted, cap=64)
+def test_match_quality(spark, transcripts_smoke):
+    assign = match_conversations(transcripts_smoke, threshold=0.6)
     rows = assign.collect()
     pred = {}
     gold = {}
@@ -57,13 +55,6 @@ def test_match_quality(spark, transcripts_smoke, salted):
     assert precision >= 0.95, f"precision {precision}"
     assert recall >= 0.85, f"recall {recall}"
     assert f1 >= 0.90, f"f1 {f1}"
-
-
-def test_salted_equals_unsalted(spark, transcripts_smoke):
-    a = match_conversations(transcripts_smoke, salted=True, cap=16)
-    b = match_conversations(transcripts_smoke, salted=False)
-    diff = a.exceptAll(b).count() + b.exceptAll(a).count()
-    assert diff == 0
 
 
 def test_dedup_conversations_covers_all(spark, transcripts_smoke):

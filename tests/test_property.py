@@ -10,7 +10,7 @@ import re
 from collections import deque
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from mapping_analysis_spark.functions.media_codecs import (
@@ -24,7 +24,7 @@ from mapping_analysis_spark.functions.text import BPE_ISH_PATTERN
 from mapping_analysis_spark.operators.clustering import UnionFind
 
 
-@settings(max_examples=30, deadline=None)
+@settings(max_examples=30, deadline=None, derandomize=True)
 @given(
     h=st.integers(1, 12),
     w=st.integers(1, 12),
@@ -36,7 +36,7 @@ def test_png_roundtrip_property(h, w, ch, seed):
     assert np.array_equal(decode_png(encode_png(img)), img)
 
 
-@settings(max_examples=30, deadline=None)
+@settings(max_examples=30, deadline=None, derandomize=True)
 @given(
     n=st.integers(1, 500),
     ch=st.sampled_from([1, 2]),
@@ -52,7 +52,7 @@ def test_wav_roundtrip_property(n, ch, rate, seed):
     assert np.max(np.abs(out - x)) <= 1.0 / 32767 + 1e-7
 
 
-@settings(max_examples=50, deadline=None)
+@settings(max_examples=50, deadline=None, derandomize=True)
 @given(
     edges=st.lists(
         st.tuples(st.integers(0, 30), st.integers(0, 30)), min_size=0, max_size=60
@@ -87,7 +87,7 @@ def test_union_find_matches_bfs_reference(edges):
     assert got == want
 
 
-@settings(max_examples=100, deadline=None)
+@settings(max_examples=100, deadline=None, derandomize=True)
 @given(st.text(max_size=200))
 def test_bpe_grammar_is_exhaustive(s):
     """The BPE-ish pre-tokenizer partitions the input: concatenating the
@@ -99,7 +99,7 @@ def test_bpe_grammar_is_exhaustive(s):
     assert "".join(toks) == s
 
 
-@settings(max_examples=30, deadline=None)
+@settings(max_examples=30, deadline=None, derandomize=True)
 @given(
     h=st.integers(1, 20),
     w=st.integers(1, 20),
@@ -131,7 +131,7 @@ def _jw_scalar_reference(x: str, y: str) -> float:
     return j
 
 
-@settings(max_examples=150, deadline=None)
+@settings(max_examples=150, deadline=None, derandomize=True)
 @given(
     x=st.text(alphabet=st.characters(codec="ascii", exclude_characters="\x00"), max_size=40),
     y=st.text(alphabet=st.characters(codec="ascii", exclude_characters="\x00"), max_size=40),
@@ -147,7 +147,7 @@ def test_jaro_winkler_bit_kernel_matches_scalar(x, y):
     assert got == _jw_scalar_reference(x, y)
 
 
-@settings(max_examples=80, deadline=None)
+@settings(max_examples=80, deadline=None, derandomize=True)
 @given(
     x=st.text(max_size=30),
     y=st.text(max_size=30),
@@ -163,8 +163,9 @@ def test_jaro_winkler_masked_kernel_matches_scalar(x, y):
     assert got == _jw_scalar_reference(x, y)
 
 
-@settings(max_examples=120, deadline=None)
+@settings(max_examples=120, deadline=None, derandomize=True)
 @given(x=st.text(max_size=25), y=st.text(max_size=25))
+@example("", "#")
 def test_simmetrics_trigram_kernel_matches_counter_scalar(x, y):
     """The vectorized simmetrics trigram-cosine (the metric every real-data
     quality anchor rests on) must be bit-identical to the Counter-based

@@ -116,3 +116,26 @@ def test_incremental_result_matches_batch_pipeline(spark, scan_run):
     # the planted cross-source duplicates actually clustered
     n_nontrivial = len({c for _, c in got if sum(1 for _, c2 in got if c2 == c) > 1})
     assert n_nontrivial >= ENTITIES_PER_BATCH * N_BATCHES * 0.9
+
+
+def test_streaming_bands_state_equals_batch_band_keys(spark, scan_run):
+    """The ``bands`` the streaming job keeps on its ``records`` state are the
+    batch band keys of the batch signature: both paths call one kernel."""
+    from mapping_analysis_spark.functions.simfns import band_keys
+    from mapping_analysis_spark.pipeline import (
+        DEFAULT_LSH_BANDS,
+        conversation_records,
+        featurize_records,
+    )
+
+    job, _, all_rows = scan_run
+    full = spark.createDataFrame(all_rows, TRANSCRIPT_SCHEMA)
+    want = {
+        r["rid"]: list(r["bands"])
+        for r in featurize_records(conversation_records(full))
+        .select("rid", band_keys("minhash", DEFAULT_LSH_BANDS).alias("bands"))
+        .collect()
+    }
+    got = {r["rid"]: list(r["bands"]) for r in job.records.read().select("rid", "bands").collect()}
+    assert len(got) == len(want) > 0
+    assert got == want
