@@ -12,6 +12,7 @@ while floor/multiply are exact IEEE ops.
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 
@@ -151,30 +152,36 @@ SELECT rid, source, CAST(1 << source AS INT) AS smask, label, doc, n_turns FROM 
 """
 
 
-_CACHES: list[dict] = []
+_MEMOS: list[dict] = []
 
 
-def _register_cache(d: dict) -> dict:
-    _CACHES.append(d)
-    return d
+def _session_memo(fn: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
+    """Memoize ``fn(spark, *args)`` per SparkContext; ``fn`` materializes its
+    own result (``localCheckpoint(eager=True)``).
+
+    Keyed on ``(applicationId, *args)`` — ``applicationId`` is unique per
+    SparkContext, whereas a stopped session's ``id(spark)`` can be reused by
+    a new one, handing back DataFrames bound to a dead context. Every lookup
+    evicts the entries of other (dead) applications from all memoized
+    functions, so checkpointed RDDs / broadcasts from prior sessions don't
+    accumulate."""
+    memo: dict[tuple, DataFrame] = {}
+    _MEMOS.append(memo)
+
+    @functools.wraps(fn)
+    def memoized(spark: SparkSession, *args):
+        key = (spark.sparkContext.applicationId, *args)
+        for m in _MEMOS:
+            for stale in [k for k in m if k[0] != key[0]]:
+                del m[stale]
+        if key not in memo:
+            memo[key] = fn(spark, *args)
+        return memo[key]
+
+    return memoized
 
 
-def _cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Session-scoped memo key. Keyed on ``applicationId`` (unique per
-    SparkContext), NOT ``id(spark)`` — a stopped session's id() can be
-    reused by a new one, handing back DataFrames bound to a dead context.
-    Entries from other (dead) applications are evicted on every lookup so
-    checkpointed RDDs / broadcasts from prior sessions don't accumulate."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for c in _CACHES:
-        for stale in [k for k in c if k[0] != key[0]]:
-            del c[stale]
-    return key
-
-
-_BLOCKED_CACHE: dict[tuple[str, str], DataFrame] = _register_cache({})
-
-
+@_session_memo
 def _blocked_key_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per (record, blocking key): (bk, rid, source, toks, label),
     stop-blocks pruned — mirrors the ``blk`` CTE of _BLOCKED_PAIRS_SQL.
@@ -186,10 +193,6 @@ def _blocked_key_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1)."""
     from mapping_analysis_spark.pipeline import block_keys_array
 
-    key = _cache_key(spark, sf_dir)
-    cached = _BLOCKED_CACHE.get(key)
-    if cached is not None:
-        return cached
     rec = conversation_records(_t(spark, sf_dir))
     rec = rec.withColumn("toks", distinct_tokens(F.col("doc")))
     rec = rec.select(
@@ -197,36 +200,32 @@ def _blocked_key_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sizes = rec.groupBy("bk").agg(F.count("*").alias("_bn"))
     ok = sizes.filter(F.col("_bn") <= DEFAULT_MAX_BLOCK_SIZE).select("bk")
-    out = rec.join(F.broadcast(ok), "bk", "left_semi").localCheckpoint(eager=True)
-    _BLOCKED_CACHE[key] = out
-    return out
+    return rec.join(F.broadcast(ok), "bk", "left_semi").localCheckpoint(eager=True)
 
 
-_PAIR_IDS_CACHE: dict[tuple[str, str], DataFrame] = _register_cache({})
+@_session_memo
+def _blocked_pair_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deduped cross-source candidate id pairs (a_rid, b_rid), memoized:
+    shared by the jaccard/trigram/max_both/attr-sim queries."""
+    from mapping_analysis_spark.operators.blocking import block_pairs
+
+    thin = _blocked_key_rows(spark, sf_dir).select("rid", "source", "bk")
+    return (
+        block_pairs(thin, block_col="bk")
+        .select("a_rid", "b_rid")
+        .dropDuplicates(["a_rid", "b_rid"])
+        .localCheckpoint(eager=True)
+    )
 
 
 def _blocked_pairs(spark: SparkSession, sf_dir: str, payload: list[str]) -> DataFrame:
-    """Deduped cross-source candidate pairs with a_/b_ payload columns.
-
-    The deduped id-pair set is memoized (shared by the jaccard/trigram/
-    max_both/attr-sim queries); payload columns join back from the cached
-    blocked rows, so each query only pays its own payload join."""
-    from mapping_analysis_spark.operators.blocking import block_pairs
-
-    key = _cache_key(spark, sf_dir)
-    ids = _PAIR_IDS_CACHE.get(key)
-    rows = _blocked_key_rows(spark, sf_dir)
-    if ids is None:
-        thin = rows.select("rid", "source", "bk")
-        ids = (
-            block_pairs(thin, block_col="bk")
-            .select("a_rid", "b_rid")
-            .dropDuplicates(["a_rid", "b_rid"])
-            .localCheckpoint(eager=True)
-        )
-        _PAIR_IDS_CACHE[key] = ids
+    """Deduped cross-source candidate pairs with a_/b_ payload columns; the
+    payload columns join back from the memoized blocked rows, so each query
+    only pays its own payload join."""
+    ids = _blocked_pair_ids(spark, sf_dir)
     if not payload:
         return ids
+    rows = _blocked_key_rows(spark, sf_dir)
     rec = rows.dropDuplicates(["rid"]).select(["rid"] + payload)
     a = rec.select([F.col(c).alias(f"a_{c}") for c in rec.columns])
     b = rec.select([F.col(c).alias(f"b_{c}") for c in rec.columns])
@@ -348,9 +347,7 @@ SELECT a_rid, b_rid, {sqlgen.sim_e6_sql('sim')} AS sim_e6 FROM ranked WHERE ra =
 """
 
 
-_DEDUP_ASSIGN_CACHE: dict[tuple[str, str], DataFrame] = _register_cache({})
-
-
+@_session_memo
 def q_conv_dedup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship (oracle-checkable variant): prefix-blocked pairs → Jaccard >=
     threshold → connected components → (conv_id, cluster_id, cluster_size).
@@ -360,10 +357,6 @@ def q_conv_dedup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate_creator all start from this assignment — sharing the
     materialized frame drops three full re-derives (pair gen + Jaccard +
     CC, ~7 s each at sf0.1) from the bench."""
-    key = _cache_key(spark, sf_dir)
-    cached = _DEDUP_ASSIGN_CACHE.get(key)
-    if cached is not None:
-        return cached
     edges = (
         _keyed_scored_pairs(spark, sf_dir)
         .filter(F.col("sim") >= DEFAULT_THRESHOLD)
@@ -380,11 +373,9 @@ def q_conv_dedup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("comp")
     )
     sizes = assign.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
-    out = assign.join(sizes, "cluster_id").select(
+    return assign.join(sizes, "cluster_id").select(
         "conv_id", "cluster_id", "cluster_size"
     ).localCheckpoint(eager=True)
-    _DEDUP_ASSIGN_CACHE[key] = out
-    return out
 
 
 SQL_CONV_DEDUP_BLOCKED = f"""
@@ -1308,27 +1299,17 @@ SELECT doc_id, {_LANG_CASE} AS lang_guess, {_LANG_BEST} AS marker_hits FROM t
 """
 
 
-_TOKS_CACHE: dict[tuple[str, str], DataFrame] = _register_cache({})
-_MUSIC_RECORDS_CACHE: dict[tuple[str, str], DataFrame] = _register_cache({})
-_GEO_VERTICES_CACHE: dict[tuple[str, str], DataFrame] = _register_cache({})
-
-
+@_session_memo
 def _record_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized (rid, toks) featurization — unpruned (every record present,
     unlike `_blocked_key_rows`, whose stop-block pruning may drop records
     whose keys are all stop blocks)."""
-    key = _cache_key(spark, sf_dir)
-    cached = _TOKS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    rec = (
+    return (
         conversation_records(_t(spark, sf_dir))
         .withColumn("toks", distinct_tokens(F.col("doc")))
         .select("rid", "toks")
         .localCheckpoint(eager=True)
     )
-    _TOKS_CACHE[key] = rec
-    return rec
 
 
 def q_conv_idf_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1438,9 +1419,8 @@ def q_conv_greedy_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HUNGARIAN_THRESHOLD = 0.5
 _HUNGARIAN_MAX_EDGES = 12
 
-_KEYED_SCORED_CACHE: dict[tuple[str, str], DataFrame] = _register_cache({})
 
-
+@_session_memo
 def _keyed_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Block-keyed scored candidate pairs (bk, a_rid, b_rid, a_source,
     b_source, sim) at the lowest consumer threshold (0.5), memoized per
@@ -1455,10 +1435,6 @@ def _keyed_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     block keys with one semi-filtered join against the thin keyed id set."""
     from mapping_analysis_spark.operators.blocking import block_pairs
 
-    key = _cache_key(spark, sf_dir)
-    cached = _KEYED_SCORED_CACHE.get(key)
-    if cached is not None:
-        return cached
     pairs = _blocked_pairs(spark, sf_dir, ["toks"])
     scored = (
         pairs.withColumn("sim", token_set_jaccard(F.col("a_toks"), F.col("b_toks")))
@@ -1476,9 +1452,7 @@ def _keyed_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count() is one cheap job over the already-checkpointed RDD.
     if scored.count() <= 2_000_000:
         scored = F.broadcast(scored)
-    out = keyed_ids.join(scored, ["a_rid", "b_rid"]).localCheckpoint(eager=True)
-    _KEYED_SCORED_CACHE[key] = out
-    return out
+    return keyed_ids.join(scored, ["a_rid", "b_rid"]).localCheckpoint(eager=True)
 
 
 def q_conv_hungarian(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1910,19 +1884,13 @@ _TYPE_NAMES = [
 ]
 
 
-_ATTR_CACHE: dict[tuple[str, str], DataFrame] = _register_cache({})
-
-
+@_session_memo
 def _attr_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derived attribute table, memoized per (session, sf_dir) with an eager
     localCheckpoint: six contract queries (pair geo/attr/type sims,
     candidate creator, type-overlap CC, decomposition) consume it and each
     replan the full 2M-turn conversation aggregation without the memo
     (measured ~2 s per query at sf1.0)."""
-    key = _cache_key(spark, sf_dir)
-    cached = _ATTR_CACHE.get(key)
-    if cached is not None:
-        return cached
     rec = conversation_records(_t(spark, sf_dir))
     dl = F.length("doc")
     ll = F.length("label")
@@ -1930,7 +1898,7 @@ def _attr_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     t_arr = F.array(*[F.lit(x) for x in _TYPE_NAMES])
     t1 = F.element_at(t_arr, (ll % 7 + 1).cast("int"))
     t2 = F.element_at(t_arr, (nt % 7 + 1).cast("int"))
-    out = rec.select(
+    return rec.select(
         "rid",
         "source",
         F.when(nt % 17 == 0, F.lit(95.0))
@@ -1948,8 +1916,6 @@ def _attr_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("types"),
         "label",
     ).localCheckpoint(eager=True)
-    _ATTR_CACHE[key] = out
-    return out
 
 
 _TYPES_SQL_LIST = "['" + "','".join(_TYPE_NAMES) + "']"
@@ -2398,6 +2364,21 @@ _MUSIC_CSV = (
 )
 
 
+@_session_memo
+def _music_records(spark: SparkSession) -> DataFrame:
+    """The MusicBrainz fixture's records, memoized. The 19k-row CSV arrives
+    as ONE split and feeds five consumers (star edges, intra-source removal,
+    both ata sides, link filter) — fan out to cluster parallelism and
+    checkpoint so it parses once, distributed."""
+    from mapping_analysis_spark.music import music_records
+
+    return (
+        music_records(spark, _MUSIC_CSV)
+        .repartition(spark.sparkContext.defaultParallelism)
+        .localCheckpoint(eager=True)
+    )
+
+
 def q_music_csimq_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Music-domain DefaultPreprocessing on the reference's real gold-labeled
     MusicBrainz-20000 CSV (``MusicBrainzTest.java:112-141``): CSV source
@@ -2408,25 +2389,9 @@ def q_music_csimq_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     checked-in 19,375-record fixture, putting the real-data music path under
     the driver's DuckDB gate like ``nc_csimq_edges``. Output: (a, b,
     sim_e6)."""
-    from mapping_analysis_spark.music import (
-        music_input_edges,
-        music_records,
-        music_scored_edges,
-    )
+    from mapping_analysis_spark.music import music_input_edges, music_scored_edges
 
-    # the 19k-row CSV arrives as ONE split and feeds five consumers (star
-    # edges, intra-source removal, both ata sides, link filter) — fan out to
-    # cluster parallelism and checkpoint so it parses once, distributed;
-    # memoized per session like the other shared materializations
-    key = _cache_key(spark, _MUSIC_CSV)
-    records = _MUSIC_RECORDS_CACHE.get(key)
-    if records is None:
-        records = (
-            music_records(spark, _MUSIC_CSV)
-            .repartition(spark.sparkContext.defaultParallelism)
-            .localCheckpoint(eager=True)
-        )
-        _MUSIC_RECORDS_CACHE[key] = records
+    records = _music_records(spark)
     scored = music_scored_edges(records, music_input_edges(records))
     return scored.select("a", "b", sim_e6(F.col("sim")).alias("sim_e6"))
 
@@ -2509,6 +2474,20 @@ _GEO_VERTICES = (
 )
 
 
+@_session_memo
+def _geo_vertices(spark: SparkSession) -> DataFrame:
+    """The geography fixture's vertices, memoized. The single-split JSON
+    feeds both sides of the block self-join — fan out + checkpoint so it
+    parses once, distributed."""
+    from mapping_analysis_spark.geo import read_geo_vertices
+
+    return (
+        read_geo_vertices(spark, _GEO_VERTICES)
+        .repartition(spark.sparkContext.defaultParallelism)
+        .localCheckpoint(eager=True)
+    )
+
+
 def q_geo_settlement_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Geography-domain MULTI initial preprocessing on the reference's real
     4-source settlement graph (``IncrementalGeoClusteringTest.java``
@@ -2520,21 +2499,9 @@ def q_geo_settlement_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference fixture. Output: (a, b, sim_e6). The greedy source-disjoint
     selection + CC + gold F1 0.976 live in
     ``tests/test_geo_settlement.py`` (union-find, not SQL-expressible)."""
-    from mapping_analysis_spark.geo import geo_scored_edges, read_geo_vertices
+    from mapping_analysis_spark.geo import geo_scored_edges
 
-    # single-split JSON fixture feeding both sides of the block self-join —
-    # fan out + checkpoint so it parses once, distributed; memoized per
-    # session like the other shared materializations
-    key = _cache_key(spark, _GEO_VERTICES)
-    v = _GEO_VERTICES_CACHE.get(key)
-    if v is None:
-        v = (
-            read_geo_vertices(spark, _GEO_VERTICES)
-            .repartition(spark.sparkContext.defaultParallelism)
-            .localCheckpoint(eager=True)
-        )
-        _GEO_VERTICES_CACHE[key] = v
-    return geo_scored_edges(v).select(
+    return geo_scored_edges(_geo_vertices(spark)).select(
         "a", "b", sim_e6(F.col("sim")).alias("sim_e6")
     )
 

@@ -7,8 +7,8 @@ as an idiomatic PySpark engine:
 * batch core: DataFrame-declarative blocking → similarity → matching →
   clustering → representative pipeline (``pipeline.py``)
 * streaming: Structured Streaming micro-batch wrapper with event-time
-  watermarks, session windows, stateful incremental clustering and an
-  exactly-once idempotent keyed sink (``streaming/``)
+  watermarks, session windows, and an incremental clustering job driven by
+  foreachBatch over exactly-once snapshot state tables (``streaming/``)
 * training-data ops: dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard /
   embedding cosine), ANN search, text quality analysis (``operators/``)
 

@@ -310,3 +310,37 @@ def test_band_table_matches_spark(spark):
     assert len(got) == len(want) > 0
     assert (got["rid"].to_numpy() == want["rid"].to_numpy()).all()
     assert (got["band_hash"].to_numpy().astype("int64") == want["band_hash"].to_numpy().astype("int64")).all()
+
+
+def test_session_memo_keys_on_application_and_evicts_other_apps():
+    """One build per (applicationId, args); a lookup under another
+    application evicts the old one's entries from every memoized function."""
+    from types import SimpleNamespace
+
+    from __spark_entry__ import _session_memo
+
+    calls = []
+
+    def session(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    @_session_memo
+    def build(spark, sf_dir):
+        calls.append((spark.sparkContext.applicationId, sf_dir))
+        return object()
+
+    @_session_memo
+    def other(spark):
+        calls.append((spark.sparkContext.applicationId, "other"))
+        return object()
+
+    first = build(session("app-1"), "sf0.01")
+    assert build(session("app-1"), "sf0.01") is first
+    build(session("app-1"), "sf0.1")
+    other(session("app-1"))
+    assert calls == [("app-1", "sf0.01"), ("app-1", "sf0.1"), ("app-1", "other")]
+
+    build(session("app-2"), "sf0.01")
+    assert build(session("app-1"), "sf0.01") is not first
+    other(session("app-1"))
+    assert calls[3:] == [("app-2", "sf0.01"), ("app-1", "sf0.01"), ("app-1", "other")]

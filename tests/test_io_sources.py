@@ -1,4 +1,4 @@
-"""EPGM / JDBC source + partition-id mapper (SURVEY §2 rows #4, #5, #23)."""
+"""EPGM source + partition-id mapper (SURVEY §2 rows #4, #23)."""
 
 from __future__ import annotations
 
@@ -74,27 +74,3 @@ def test_partition_id_mapper(spark):
     # per-partition counts = the block-split statistics input
     per = with_partition_id(df).groupBy("partition_id").count()
     assert per.agg(F.sum("count")).collect()[0][0] == 100
-
-
-def test_jdbc_reader_option_plumbing(spark):
-    """No database in the sandbox — assert the partitioned-read options are
-    applied (the reader fails only at connect time)."""
-    import pytest
-
-    from mapping_analysis_spark.io.jdbc_source import read_jdbc
-
-    with pytest.raises(Exception):
-        # connect failure proves load() was invoked with the options set;
-        # a malformed option set raises IllegalArgumentException instead
-        read_jdbc(
-            spark,
-            "jdbc:postgresql://localhost:1/nope",
-            "t",
-            partition_column="id",
-            lower_bound=0,
-            upper_bound=100,
-            num_partitions=4,
-            properties={"user": "x"},
-        ).count()
-    with pytest.raises(AssertionError):
-        read_jdbc(spark, "jdbc:postgresql://localhost:1/nope", "t", partition_column="id")

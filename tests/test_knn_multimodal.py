@@ -1,4 +1,4 @@
-"""ANN search + multimodal plumbing tests."""
+"""ANN search tests (exact, IVF and LSH top-k)."""
 
 from __future__ import annotations
 
@@ -6,11 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapping_analysis_spark.operators.knn import brute_topk, hyperplane_lsh_topk, ivf_topk
-from mapping_analysis_spark.operators.multimodal import (
-    extract_features,
-    frame_sample_plan,
-    synthetic_media,
-)
 
 SF = "/root/testdata/sf0.001"
 
@@ -101,30 +96,6 @@ def test_lsh_deterministic(spark, emb):
     assert a == b
 
 
-def test_multimodal_feature_extraction(spark):
-    media = synthetic_media(spark, n=30)
-    feats = extract_features(media, dim=16).collect()
-    assert len(feats) == 30
-    for r in feats:
-        assert len(r["feature"]) == 16
-        assert r["n_bytes"] > 0
-    # deterministic across runs
-    again = extract_features(synthetic_media(spark, n=30), dim=16).collect()
-    assert sorted(r["media_id"] for r in again) == sorted(r["media_id"] for r in feats)
-    f1 = {r["media_id"]: r["feature"] for r in feats}
-    f2 = {r["media_id"]: r["feature"] for r in again}
-    assert f1 == f2
-
-
-def test_frame_sample_plan(spark):
-    media = synthetic_media(spark, n=30)
-    plan = frame_sample_plan(media, every_ms=1000)
-    rows = plan.collect()
-    assert all(r["frame_ts_ms"] % 1000 == 0 for r in rows)
-    vids = media.filter(F.col("kind") == "video").count()
-    assert plan.select("media_id").distinct().count() == vids
-
-
 def test_md5_lsh_null_embedding_survives(spark, emb):
     from pyspark.sql.types import ArrayType, FloatType
 
@@ -145,11 +116,3 @@ def test_md5_lsh_null_embedding_survives(spark, emb):
         tables=4,
     ).collect()
     assert len(out) > 0  # no task kill from the NULL row
-
-
-def test_extract_features_without_codec_column(spark):
-    import numpy as np
-
-    media = synthetic_media(spark, n=6).drop("codec")
-    rows = extract_features(media, decode_fn=lambda b: np.ones(3, dtype=np.float32)).collect()
-    assert len(rows) == 6 and all(r["feature"] == [1.0, 1.0, 1.0] for r in rows)
