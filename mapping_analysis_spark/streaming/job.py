@@ -136,10 +136,6 @@ class IncrementalClusteringJob:
         self.comp_members = tbl("comp_members", ["comp"])
         self.assignments = tbl("assignments", ["conv_id"])
         self.metrics_path = os.path.join(state_dir, "metrics.jsonl")
-        self.state_buckets = state_buckets
-        # full-table counts are O(state) maintenance observation — sampled,
-        # 0 disables (default: per-batch metrics must stay O(batch))
-        self.state_metrics_every = 0
         # history pruning is pure-filesystem maintenance — amortized
         self.prune_every = 4
 
@@ -194,13 +190,6 @@ class IncrementalClusteringJob:
             self._log(batch_id, 0, t0, replayed=True)
             return  # exactly-once: replay after restart is a no-op
 
-        _prof = os.environ.get("SPARK_GRAFT_BATCH_PROFILE") == "1"
-        _marks: list = [("start", time.time(), group)]
-
-        def _mark(name: str) -> None:
-            if _prof:
-                _marks.append((name, time.time(), self._job_counter()))
-
         batch_df = (
             batch_df.withColumn("_file", F.input_file_name())
             .dropDuplicates(["conv_id", "turn_idx"])
@@ -214,7 +203,6 @@ class IncrementalClusteringJob:
         n_rows = int(head["n"])
         input_files = [f for f in head["files"] if f]
         batch_df = batch_df.drop("_file")
-        _mark("head")
         if n_rows == 0:
             # empty deltas keep replay detection monotonic at zero data cost
             for st in self._tables:
@@ -239,9 +227,7 @@ class IncrementalClusteringJob:
         )
         if old_recs is not None:
             old_recs = old_recs.localCheckpoint(eager=False)
-        _mark("old_recs_read")
         self.turns.upsert(batch_df, ["conv_id", "turn_idx"], batch_id)
-        _mark("turns_upsert")
         turns_aff = self.turns.read_for(affected, buckets=aff_buckets)
 
         # 3. re-derive records for affected conversations only — identical
@@ -259,7 +245,6 @@ class IncrementalClusteringJob:
             band_keys("minhash", self.lsh_bands).alias("bands"),
         ).localCheckpoint(eager=False)
         self.records.upsert(recs_full, ["rid"], batch_id)
-        _mark("records_upsert")
 
         # 3b. posting-list deltas (blocks, bands) + INCREMENTAL block sizes
         new_post = recs_full.select("rid", F.explode("bks").alias("bk"))
@@ -274,7 +259,6 @@ class IncrementalClusteringJob:
             old_bands = self._empty("rid string, band_idx int, band_hash long")
         del_post = old_post.join(new_post, ["bk", "rid"], "left_anti")
         self.blocks.apply_delta(new_post, del_post, ["bk", "rid"], batch_id)
-        _mark("blocks_delta")
 
         new_bands = recs_full.select(
             "rid", F.posexplode("bands").alias("band_idx", "band_hash")
@@ -285,7 +269,6 @@ class IncrementalClusteringJob:
         self.bands.apply_delta(
             new_bands, del_bands, ["band_idx", "band_hash", "rid"], batch_id
         )
-        _mark("bands_delta")
 
         # block sizes: old + delta, only for blocks whose membership changed —
         # never re-aggregated over the full records state
@@ -319,7 +302,6 @@ class IncrementalClusteringJob:
             ["bk"],
             batch_id,
         )
-        _mark("block_sizes_delta")
 
         # 4a. cap-crossing detection: when a block's size crosses
         # max_block_size (either direction), every member's edge set must be
@@ -346,7 +328,6 @@ class IncrementalClusteringJob:
         # featurized rows for the full re-derive set (post-upsert state)
         recs_a = self.records.read_for(a_ids, buckets=a_buckets)
         recs_a = recs_a.localCheckpoint(eager=False)
-        _mark("a_ids")
 
         # 4b. candidates touching the re-derive set: prefix blocks ∪ LSH
         # bands, joined against the PRUNED current index (only buckets of the
@@ -390,7 +371,6 @@ class IncrementalClusteringJob:
             )
         )
         cand = p_block.union(p_band).dropDuplicates(["a_rid", "b_rid"])
-        _mark("cand_plan")
 
         # 5. verify + replace edges incident to A — payloads come from a
         # pruned read of exactly the candidate rids
@@ -441,7 +421,6 @@ class IncrementalClusteringJob:
         self.edges.apply_delta(
             self._double(e_new), self._double(removed), ["u", "v"], batch_id
         )
-        _mark("edges_delta")
 
         # 6. dirty-component recompute (scope: full re-derive set + new-edge
         # endpoints — includes cap-crossing block members). comp_members is
@@ -475,7 +454,6 @@ class IncrementalClusteringJob:
         if sub_d is None:
             sub_d = self._empty("u string, v string")
         sub_edges = self._canon(sub_d)
-        _mark("dirty_scope")
         recomputed = connected_components(sub_edges)
         # nodes in scope with no edges → singleton components
         singles = scope.join(
@@ -485,7 +463,6 @@ class IncrementalClusteringJob:
         # delta commit: only the recomputed (dirty) partition is written —
         # clean components carry over untouched in the state table
         self.node_comp.apply_delta(new_part, None, ["node"], batch_id)
-        _mark("cc_and_nodecomp")
         self.comp_members.apply_delta(
             new_part.select("comp", "node"),
             dirty_members.select("comp", "node"),
@@ -497,19 +474,10 @@ class IncrementalClusteringJob:
         updates = new_part.select(
             F.col("node").alias("conv_id"), F.col("comp").alias("cluster_id")
         )
-        _mark("comp_members_delta")
         self.assignments.upsert(updates, ["conv_id"], batch_id)
-        _mark("assignments")
         if self.prune_every and batch_id % self.prune_every == self.prune_every - 1:
             for st in self._tables:
                 st.prune(keep_last=3)
-        _mark("prune")
-        if _prof:
-            spans = [
-                f"{name}={t - _marks[i][1]:.2f}s/{j - _marks[i][2]}j"
-                for i, (name, t, j) in enumerate(_marks[1:])
-            ]
-            print(f"[batch {batch_id}] " + " ".join(spans), flush=True)
         self._log(batch_id, n_rows, t0, input_files=input_files, group=group)
 
     # -- metrics (north rule: per-partition lineage + throughput per batch) --
@@ -549,17 +517,6 @@ class IncrementalClusteringJob:
             jobs = self._job_counter()
             if jobs is not None and group is not None:
                 rec["spark_jobs"] = jobs - group
-        # state-size metrics are full-table counts (O(state) observation) —
-        # sampled only when explicitly enabled
-        if (
-            self.state_metrics_every
-            and batch_id % self.state_metrics_every == 0
-            and not replayed
-        ):
-            rec["state_rows"] = {
-                name: (st.read().count() if st.read() is not None else 0)
-                for name, st in [("edges", self.edges), ("comps", self.node_comp)]
-            }
         with open(self.metrics_path, "a") as f:
             f.write(json.dumps(rec) + "\n")
 

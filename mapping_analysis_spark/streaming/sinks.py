@@ -29,10 +29,6 @@ Iceberg merge-on-read table:
   This is the one O(state) write; it is amortized (every ``compact_every``
   batches), exactly like Iceberg table maintenance, and is accounted
   separately from per-batch scan volume (``scan_stats['compact_rows']``).
-
-When real Iceberg jars ARE on the classpath, :class:`IcebergStateTable`
-(same interface, ``MERGE INTO`` + ``bucket(N, key)`` partitioning) is the
-production implementation — see ``make_state_table``.
 """
 
 from __future__ import annotations
@@ -428,268 +424,3 @@ class SnapshotStateTable:
         self.scan_stats = {"read_rows": 0, "read_calls": 0, "compact_rows": 0}
         return out
 
-
-class IcebergStateTable:
-    """Real-Iceberg implementation of the state-table interface, selected by
-    :func:`make_state_table` when Iceberg classes are on the classpath.
-
-    Maps 1:1 onto the stand-in's contract:
-
-    * table creation — ``CREATE TABLE ... PARTITIONED BY (bucket(N, key))``
-      (the stand-in's ``_bucket`` hive partitioning);
-    * ``apply_delta`` — one ``MERGE INTO`` with ``WHEN MATCHED [AND _op='d']
-      THEN DELETE / UPDATE`` + ``WHEN NOT MATCHED AND _op='u' THEN INSERT``
-      (the stand-in's tombstoned delta dirs); per-batch idempotence via a
-      ``last_merged_batch`` table property checked before merging (the
-      stand-in's ``_SUCCESS``-gated skip): ``apply_delta`` returns early
-      when ``batch_id <= last_merged_batch``. The MERGE and the property
-      update are two Iceberg commits, so a crash between them replays the
-      MERGE — which is row-idempotent for an identical delta (matched
-      upserts re-set the same values, matched deletes are already gone);
-      deriving the *identical* delta on replay is the caller's job (the
-      streaming kernel's version-pinned pre-commit reads);
-    * ``read_for`` — a join on the key prefix; Iceberg prunes to the
-      bucket partitions exactly as the stand-in's directory filter does;
-    * compaction/prune — ``CALL system.rewrite_data_files`` /
-      ``expire_snapshots`` (amortized maintenance, as in the stand-in).
-
-    The sandbox has no Iceberg jars, so methods raise if invoked without the
-    runtime — but the class imports and unit-tests its SQL generation
-    (``tests/test_evaluation_sinks.py::test_iceberg_sql_generation``).
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        table: str,
-        bucket_by: list[str] | None = None,
-        num_buckets: int = 32,
-    ) -> None:
-        self.spark = spark
-        self.table = table
-        self.bucket_by = list(bucket_by) if bucket_by else None
-        self.num_buckets = num_buckets
-
-    @staticmethod
-    def available(spark: SparkSession) -> bool:
-        """True when the Iceberg Spark runtime is on the JVM classpath."""
-        try:
-            spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-                "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions"
-            )
-            return True
-        except Exception:
-            return False
-
-    # -- SQL generation (unit-testable without the jars) ---------------------
-
-    def create_sql(self, schema_ddl: str) -> str:
-        part = ""
-        if self.bucket_by:
-            cols = ", ".join(
-                f"bucket({self.num_buckets}, {c})" for c in self.bucket_by
-            )
-            part = f" PARTITIONED BY ({cols})"
-        return (
-            f"CREATE TABLE IF NOT EXISTS {self.table} ({schema_ddl})"
-            f" USING iceberg{part}"
-        )
-
-    def merge_sql(self, keys: list[str], cols: list[str]) -> str:
-        on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-        sets = ", ".join(f"t.{c} = s.{c}" for c in cols if c not in keys)
-        ins_cols = ", ".join(cols)
-        ins_vals = ", ".join(f"s.{c}" for c in cols)
-        return (
-            f"MERGE INTO {self.table} t USING _delta s ON {on} "
-            f"WHEN MATCHED AND s._op = 'd' THEN DELETE "
-            f"WHEN MATCHED THEN UPDATE SET {sets} "
-            f"WHEN NOT MATCHED AND s._op = 'u' THEN INSERT ({ins_cols}) "
-            f"VALUES ({ins_vals})"
-        )
-
-    def compact_sql(self) -> str:
-        return f"CALL system.rewrite_data_files(table => '{self.table}')"
-
-    def bucket_ids_sql(self, keys_view: str) -> str:
-        """Distinct Iceberg bucket ids of the requested keys (the Iceberg
-        ``bucket`` transform is Murmur3-based — it must be computed BY
-        Iceberg's own function, not by the stand-in's xxhash64)."""
-        cols = ", ".join(
-            f"system.bucket({self.num_buckets}, {c}) AS _b_{c}"
-            for c in self.bucket_by
-        )
-        return f"SELECT DISTINCT {cols} FROM {keys_view}"
-
-    def bucket_filter_sql(self, ids_per_col: dict) -> str:
-        """Explicit partition-pruning predicate for ``read_for``: a
-        conjunction of ``system.bucket(N, col) IN (...)`` terms. Guarantees
-        bucket-partition pruning (Spark 3.4+ V2 function pushdown) — a plain
-        broadcast-semi-join on the key column does NOT, which at 100 TB means
-        a full scan per micro-batch (round-3 What's wrong #4)."""
-        return " AND ".join(
-            f"system.bucket({self.num_buckets}, {c}) IN "
-            f"({', '.join(str(int(i)) for i in sorted(set(ids)))})"
-            for c, ids in ids_per_col.items()
-        )
-
-    def snapshot_prop(self, batch_id: int) -> str:
-        return f"pre_merge_snapshot_b{int(batch_id)}"
-
-    def snapshot_set_sql(self, batch_id: int, snapshot_id: int) -> str:
-        """Record the pre-merge snapshot id so a replay after a mid-batch
-        crash can version-pin its reads (the stand-in's ``_BATCH <
-        before_batch`` filter ≙ ``VERSION AS OF`` the pre-merge snapshot)."""
-        return (
-            f"ALTER TABLE {self.table} SET TBLPROPERTIES "
-            f"('{self.snapshot_prop(batch_id)}'='{int(snapshot_id)}')"
-        )
-
-    def versioned_table_sql(self, snapshot_id: int) -> str:
-        return f"SELECT * FROM {self.table} VERSION AS OF {int(snapshot_id)}"
-
-    def watermark_read_sql(self) -> str:
-        return f"SHOW TBLPROPERTIES {self.table} ('last_merged_batch')"
-
-    def watermark_set_sql(self, batch_id: int) -> str:
-        return (
-            f"ALTER TABLE {self.table} SET TBLPROPERTIES "
-            f"('last_merged_batch'='{int(batch_id)}')"
-        )
-
-    # -- execution (requires the Iceberg runtime) ----------------------------
-
-    def _require(self) -> None:
-        if not self.available(self.spark):
-            raise RuntimeError(
-                "Iceberg runtime not on the classpath — use SnapshotStateTable"
-            )
-
-    def last_merged_batch(self) -> int | None:
-        """Current watermark, or None when never merged."""
-        self._require()
-        try:
-            rows = self.spark.sql(self.watermark_read_sql()).collect()
-        except Exception:
-            return None
-        for r in rows:
-            if r["key"] == "last_merged_batch":
-                try:
-                    return int(r["value"])
-                except (TypeError, ValueError):
-                    return None
-        return None
-
-    def committed(self, batch_id: int) -> bool:
-        wm = self.last_merged_batch()
-        return wm is not None and batch_id <= wm
-
-    def current_snapshot_id(self) -> int | None:
-        self._require()
-        rows = self.spark.sql(
-            f"SELECT snapshot_id FROM {self.table}.snapshots "
-            f"ORDER BY committed_at DESC LIMIT 1"
-        ).collect()
-        return int(rows[0][0]) if rows else None
-
-    def pinned_snapshot(self, batch_id: int) -> int | None:
-        """The recorded pre-merge snapshot for ``batch_id``, if any."""
-        self._require()
-        rows = self.spark.sql(
-            f"SHOW TBLPROPERTIES {self.table} "
-            f"('{self.snapshot_prop(batch_id)}')"
-        ).collect()
-        for r in rows:
-            if r["key"] == self.snapshot_prop(batch_id):
-                try:
-                    return int(r["value"])
-                except (TypeError, ValueError):
-                    return None
-        return None
-
-    def apply_delta(self, upserts, deletes, keys: list[str], batch_id: int) -> None:
-        self._require()
-        if self.committed(batch_id):
-            return  # replayed batch — exactly-once skip
-        parts = []
-        if upserts is not None:
-            parts.append(upserts.withColumn(_OP, F.lit("u")))
-        if deletes is not None:
-            parts.append(deletes.withColumn(_OP, F.lit("d")))
-        delta = parts[0]
-        for p in parts[1:]:
-            delta = delta.unionByName(p, allowMissingColumns=True)
-        delta.createOrReplaceTempView("_delta")
-        cols = [c for c in delta.columns if c != _OP]
-        # pin the pre-merge snapshot FIRST: a crash between the property
-        # commit and the MERGE replays both (idempotent); a crash after the
-        # MERGE leaves the pin in place for version-pinned replay reads
-        snap = self.current_snapshot_id()
-        if snap is not None:
-            self.spark.sql(self.snapshot_set_sql(batch_id, snap))
-        self.spark.sql(self.merge_sql(keys, cols))
-        self.spark.sql(self.watermark_set_sql(batch_id))
-
-    def read(self):
-        self._require()
-        return self.spark.table(self.table)
-
-    def _pinned_table(self, before_batch: int | None):
-        """Table view as of BEFORE ``before_batch``'s merge (the stand-in's
-        ``_BATCH < b`` filter): current state when that batch never merged,
-        else ``VERSION AS OF`` its recorded pre-merge snapshot."""
-        if before_batch is None or not self.committed(before_batch):
-            return self.spark.table(self.table)
-        rows = self.spark.sql(
-            f"SHOW TBLPROPERTIES {self.table} "
-            f"('{self.snapshot_prop(before_batch)}')"
-        ).collect()
-        snaps = [
-            int(r["value"]) for r in rows
-            if r["key"] == self.snapshot_prop(before_batch)
-        ]
-        if not snaps:  # merged before snapshot pinning existed → best effort
-            return self.spark.table(self.table)
-        return self.spark.sql(self.versioned_table_sql(snaps[0]))
-
-    def read_for(self, keys_df, before_batch: int | None = None, buckets=None):
-        """Pruned read: an EXPLICIT ``system.bucket(N, col) IN (...)``
-        predicate (guaranteed partition pruning) plus the key semi-join.
-        ``buckets`` is accepted for interface parity with the stand-in but
-        recomputed here — Iceberg's Murmur3 bucket ids differ from the
-        stand-in's xxhash64 ids."""
-        self._require()
-        assert self.bucket_by
-        keys = keys_df.distinct()
-        view = "_rf_keys"
-        keys.createOrReplaceTempView(view)
-        rows = self.spark.sql(self.bucket_ids_sql(view)).collect()
-        if not rows:
-            return None
-        ids_per_col = {
-            c: sorted({int(r[f"_b_{c}"]) for r in rows}) for c in self.bucket_by
-        }
-        return (
-            self._pinned_table(before_batch)
-            .where(F.expr(self.bucket_filter_sql(ids_per_col)))
-            .join(F.broadcast(keys), self.bucket_by, "left_semi")
-        )
-
-
-def make_state_table(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    bucket_by: list[str] | None = None,
-    num_buckets: int = 32,
-    **kw,
-):
-    """Factory: real Iceberg table when the runtime is present, parquet
-    merge-on-read stand-in otherwise (same interface either way)."""
-    if IcebergStateTable.available(spark):  # pragma: no cover (no jars here)
-        return IcebergStateTable(
-            spark, f"state.{name}", bucket_by=bucket_by, num_buckets=num_buckets
-        )
-    return SnapshotStateTable(
-        spark, root, name, bucket_by=bucket_by, num_buckets=num_buckets, **kw
-    )

@@ -1,23 +1,27 @@
-"""Structured Streaming incremental MusicBrainz clustering job.
+"""Structured Streaming incremental representative clustering: one
+dirty-block wave job, run over the music and the geography domain.
 
-The streaming re-expression of the reference's real-data incremental loop
-(``benchmark/musicbrainz/IncrementalMusicBenchmark.java:93-189`` +
-``integration/IncrementalMusicClusteringTest.java:117-245``): record waves
-(80% ids → +10% ids → +source 5 → +final 10%) arrive as micro-batches
-through ``foreachBatch``; per wave, current representatives re-block with
-the new singletons, admitted trigram > 0.6 edges are selected
+The streaming re-expression of the reference's incremental loop
+(``benchmark/musicbrainz/IncrementalMusicBenchmark.java:93-189``,
+``integration/IncrementalMusicClusteringTest.java:117-245``,
+``IncrementalGeoClusteringTest.java::incrementalVertexAdditionClusteringTest``
+and ``MultiIncrementalClusteringFunction.java:84-133``): record waves arrive
+as micro-batches through ``foreachBatch``; per wave, the current
+representatives re-block with the new singletons, admitted > 0.6 edges
+(music: trigram cosine; geo: GeoSimilarityFunction mean) are selected
 source-disjointly and components collapse into merged representatives —
-exactly the batch driver loop ``music.music_incremental_quality``, but with
-versioned exactly-once state tables instead of the reference's
-save-to-JSON-and-restart cycle.
+exactly the batch driver loops ``music.music_incremental_quality`` and
+``geo.geo_incremental_quality``, but with versioned exactly-once state tables
+instead of the reference's save-to-JSON-and-restart cycle.
 
 Per-batch cost is **O(dirty blocks), not O(total state)** — and the pruning
 is EXACT, not approximate, because of two structural facts:
 
-* every representative carries exactly ONE blocking label
-  (``Utils.getMusicBlockingLabel`` of its ATA), so candidate edges only ever
-  connect same-block representatives and the source-disjoint union-find
-  components are block-confined;
+* every representative carries exactly ONE blocking label (music:
+  ``Utils.getMusicBlockingLabel`` of its ATA; geo: ``getGeoBlockingLabel`` of
+  its label), so candidate edges only ever connect same-block
+  representatives and the source-disjoint union-find components are
+  block-confined;
 * the greedy selection is deterministic on its input, so a block whose
   representatives are unchanged since the previous wave and whose previous
   pass produced no merges is at a FIXPOINT — re-running it (as the batch
@@ -26,27 +30,34 @@ is EXACT, not approximate, because of two structural facts:
 A block is therefore *dirty* iff it holds a new singleton this wave or held
 any member of a component that merged last wave (old labels of the merged
 constituents + the merged output's new label, which can differ — the
-majority-vote ATA can move the representative to another block). Only dirty
+majority vote can move the representative to another block). Only dirty
 blocks are read, scored, and re-selected; everything else carries over
-untouched in the state tables. Final-table parity with the batch loop is
-asserted by ``tests/test_music_streaming.py`` (0 mismatches + the published
-incremental anchor F1 0.93364 territory).
+untouched in the state tables. Final-table parity with the batch loops is
+asserted by ``tests/test_music_streaming.py`` and
+``tests/test_geo_streaming.py``.
+
+The one semantic wrinkle of geo vs music: the reference applies the
+untyped→Settlement type default ONLY to VERTEX_ADDITION waves, not to the
+initial wave — the geo job reproduces that with ``batch_id > 0``
+(``MultiIncrementalClusteringFunction.java:92-103``).
 
 State tables (``SnapshotStateTable`` — bucket-partitioned, delta-committed,
 version-pinned; the Iceberg merge-on-read stand-in of ``streaming/sinks``):
 
-* ``reps``        (cluster_rid) — current representatives
-  (cluster_rid, ata, smask, members)
+* ``reps``        (cluster_rid) — current representatives (the domain's
+  representative schema, always with ``members``)
 * ``rep_blocks``  (block, cluster_rid) — blocking-label posting list, the
   pruned path from a dirty label to its representative ids
 * ``assignments`` (rid) — record → cluster, the exactly-once output sink
 * ``dirty``       (block) — labels to re-examine next wave (small: shrinks
   to ∅ at fixpoint; read whole, version-pinned)
 
-Every read that feeds a later commit is pinned ``before_batch`` and every
-commit is idempotent per ``batch_id``, so a kill at any inter-commit
-boundary replays to the identical state (same machinery the transcript job
-proves in ``tests/test_streaming_crash_replay.py``).
+Commits run in the order ``reps`` → ``rep_blocks`` → ``assignments`` →
+``dirty``; ``dirty`` commits last and is the batch's replay gate. Every read
+that feeds a later commit is pinned ``before_batch`` and every commit is
+idempotent per ``batch_id``, so a kill at any inter-commit boundary replays
+to the identical state (same machinery the transcript job proves in
+``tests/test_streaming_crash_replay.py``).
 """
 
 from __future__ import annotations
@@ -55,10 +66,14 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from mapping_analysis_spark.geo import (
+    geo_blocking_label,
+    geo_cluster_wave,
+    geo_singletons,
+)
 from mapping_analysis_spark.music import (
     DEFAULT_BLOCKING_LENGTH,
     _merge_reps,
@@ -67,28 +82,22 @@ from mapping_analysis_spark.music import (
 )
 from mapping_analysis_spark.streaming.sinks import SnapshotStateTable
 
-MUSIC_WAVE_SCHEMA = StructType(
-    [
-        StructField("rid", LongType()),
-        StructField("ata", StringType()),
-        StructField("smask", LongType()),
-    ]
-)
+_STATE_BUCKETS = 16
 
 
-class MusicIncrementalJob:
-    """Incremental MULTI music clustering driven by foreachBatch."""
+class RepresentativeWaveJob:
+    """Incremental MULTI representative clustering driven by foreachBatch.
+    A domain subclass supplies the schemas, the blocking label and the
+    ``_singles`` / ``_merge`` steps of the batch loop."""
+
+    wave_schema: str  # DDL of the arrival files
+    rep_schema: str  # DDL of the ``reps`` table, keyed ``cluster_rid``
+    label_col: str
 
     def __init__(
-        self,
-        spark: SparkSession,
-        state_dir: str,
-        blocking_length: int = DEFAULT_BLOCKING_LENGTH,
-        state_buckets: int = 16,
-        track_scans: bool = False,
+        self, spark: SparkSession, state_dir: str, track_scans: bool = False
     ) -> None:
         self.spark = spark
-        self.blocking_length = blocking_length
 
         def tbl(name: str, bucket_by: list[str]) -> SnapshotStateTable:
             return SnapshotStateTable(
@@ -96,7 +105,7 @@ class MusicIncrementalJob:
                 state_dir,
                 name,
                 bucket_by=bucket_by,
-                num_buckets=state_buckets,
+                num_buckets=_STATE_BUCKETS,
                 track_scans=track_scans,
             )
 
@@ -114,8 +123,21 @@ class MusicIncrementalJob:
     def _empty(self, schema: str) -> DataFrame:
         return self.spark.createDataFrame([], schema)
 
-    def _label(self, col):
-        return music_blocking_label(col, self.blocking_length)
+    def _block(self, df: DataFrame) -> DataFrame:
+        return df.select(self._label(F.col(self.label_col)).alias("block"))
+
+    # -- domain hooks ----------------------------------------------------------
+
+    def _label(self, col: Column) -> Column:
+        raise NotImplementedError
+
+    def _singles(self, batch_df: DataFrame, batch_id: int) -> DataFrame:
+        """A wave → singleton representatives (``rep_schema``)."""
+        raise NotImplementedError
+
+    def _merge(self, workset: DataFrame) -> DataFrame:
+        """One wave over a representative workset → merged representatives."""
+        raise NotImplementedError
 
     # -- per-batch kernel ----------------------------------------------------
 
@@ -127,11 +149,8 @@ class MusicIncrementalJob:
             self._log(batch_id, 0, t0, replayed=True)
             return
 
-        batch_df = (
-            batch_df.select("rid", "ata", "smask")
-            .dropDuplicates(["rid"])
-            .localCheckpoint(eager=True)  # streaming source: consume in-call
-        )
+        # streaming source: consume in-call
+        batch_df = batch_df.dropDuplicates(["rid"]).localCheckpoint(eager=True)
         n_rows = batch_df.count()
         if n_rows == 0:
             for st in self._tables:
@@ -139,12 +158,7 @@ class MusicIncrementalJob:
             self._log(batch_id, 0, t0)
             return
 
-        singles = batch_df.select(
-            F.col("rid").alias("cluster_rid"),
-            "ata",
-            "smask",
-            F.array(F.col("rid")).alias("members"),
-        )
+        singles = self._singles(batch_df, batch_id)
 
         # dirty labels = this wave's singleton labels ∪ labels left dirty by
         # the previous wave's merges (pinned: replay must not see this
@@ -153,7 +167,7 @@ class MusicIncrementalJob:
         if prev_dirty is None:
             prev_dirty = self._empty("block string")
         touched = (
-            singles.select(self._label(F.col("ata")).alias("block"))
+            self._block(singles)
             .union(prev_dirty.select("block"))
             .distinct()
             .localCheckpoint(eager=False)
@@ -167,24 +181,18 @@ class MusicIncrementalJob:
         rep_ids = post.select("cluster_rid").distinct()
         reps_tchd = self.reps.read_for(rep_ids, before_batch=batch_id)
         if reps_tchd is None:
-            reps_tchd = self._empty(
-                "cluster_rid long, ata string, smask long, members array<long>"
-            )
-        workset = (
-            reps_tchd.unionByName(singles).localCheckpoint(eager=False)
-        )
+            reps_tchd = self._empty(self.rep_schema)
+        workset = reps_tchd.unionByName(singles).localCheckpoint(eager=False)
 
-        # the batch kernel itself: blocked salted pair gen → vectorized
-        # trigram admission > 0.6 → source-disjoint greedy selection →
-        # merged representatives (identical code path to the batch loop)
-        scored = _rep_blocked_scored_edges(workset, self.blocking_length)
-        merged = _merge_reps(workset, scored).localCheckpoint(eager=True)
+        # the batch kernel itself (identical code path to the batch loop)
+        merged = self._merge(workset).localCheckpoint(eager=True)
 
         # deltas vs the pre-batch state
-        w_ids = workset.select("cluster_rid")
-        removed = w_ids.join(
-            merged.select("cluster_rid"), "cluster_rid", "left_anti"
-        ).localCheckpoint(eager=False)
+        removed = (
+            workset.select("cluster_rid")
+            .join(merged.select("cluster_rid"), "cluster_rid", "left_anti")
+            .localCheckpoint(eager=False)
+        )
         # a component merged iff its kept id gained members or lost ids
         changed_kept = (
             merged.alias("m")
@@ -199,18 +207,16 @@ class MusicIncrementalJob:
                 F.col("_n_old").isNull()
                 | (F.size(F.col("m.members")) != F.col("_n_old"))
             )
-            .select("cluster_rid", "ata", "smask", "members")
+            .select("cluster_rid", self.label_col)
             .localCheckpoint(eager=False)
         )
 
         self.reps.apply_delta(merged, removed, ["cluster_rid"], batch_id)
 
         new_post = merged.select(
-            self._label(F.col("ata")).alias("block"), "cluster_rid"
+            self._label(F.col(self.label_col)).alias("block"), "cluster_rid"
         )
-        del_post = post.join(
-            new_post, ["block", "cluster_rid"], "left_anti"
-        )
+        del_post = post.join(new_post, ["block", "cluster_rid"], "left_anti")
         self.rep_blocks.apply_delta(
             new_post, del_post, ["block", "cluster_rid"], batch_id
         )
@@ -229,9 +235,8 @@ class MusicIncrementalJob:
         # Unmerged blocks are at a deterministic fixpoint — exact pruning.
         merged_members = removed.union(changed_kept.select("cluster_rid"))
         next_dirty = (
-            workset.join(merged_members, "cluster_rid", "left_semi")
-            .select(self._label(F.col("ata")).alias("block"))
-            .union(changed_kept.select(self._label(F.col("ata")).alias("block")))
+            self._block(workset.join(merged_members, "cluster_rid", "left_semi"))
+            .union(self._block(changed_kept))
             .distinct()
         )
         consumed = prev_dirty.join(next_dirty, "block", "left_anti")
@@ -242,7 +247,9 @@ class MusicIncrementalJob:
                 st.prune(keep_last=3)
         self._log(batch_id, n_rows, t0)
 
-    def _log(self, batch_id: int, n_rows: int, t0: float, replayed: bool = False) -> None:
+    def _log(
+        self, batch_id: int, n_rows: int, t0: float, replayed: bool = False
+    ) -> None:
         dur = time.time() - t0
         rec = {
             "batch_id": batch_id,
@@ -266,7 +273,7 @@ class MusicIncrementalJob:
         kernel — the reference's per-increment Flink job restarts become
         micro-batch triggers."""
         stream = (
-            self.spark.readStream.schema(MUSIC_WAVE_SCHEMA)
+            self.spark.readStream.schema(self.wave_schema)
             .option("maxFilesPerTrigger", max_files_per_trigger)
             .option("latestFirst", "false")
             .parquet(input_dir)
@@ -281,3 +288,62 @@ class MusicIncrementalJob:
     def result(self) -> DataFrame | None:
         """Final (rid, cluster_rid) assignment table."""
         return self.assignments.read()
+
+
+class MusicIncrementalJob(RepresentativeWaveJob):
+    """MusicBrainz waves: blocked trigram-cosine admission, majority ATA."""
+
+    wave_schema = "rid long, ata string, smask long"
+    rep_schema = "cluster_rid long, ata string, smask long, members array<long>"
+    label_col = "ata"
+
+    def _label(self, col: Column) -> Column:
+        return music_blocking_label(col, DEFAULT_BLOCKING_LENGTH)
+
+    def _singles(self, batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return batch_df.select(
+            F.col("rid").alias("cluster_rid"),
+            "ata",
+            "smask",
+            F.array(F.col("rid")).alias("members"),
+        )
+
+    def _merge(self, workset: DataFrame) -> DataFrame:
+        # blocked salted pair gen → vectorized trigram admission > 0.6 →
+        # source-disjoint greedy selection → merged representatives
+        return _merge_reps(
+            workset, _rep_blocked_scored_edges(workset, DEFAULT_BLOCKING_LENGTH)
+        )
+
+
+class GeoIncrementalJob(RepresentativeWaveJob):
+    """Settlement waves: GeoSimilarityFunction admission, GeographicMajority."""
+
+    wave_schema = "rid long, label string, lat double, lon double, source string"
+    rep_schema = (
+        "cluster_rid long, label string, lat double, lon double, "
+        "sources array<string>, members array<long>, types array<string>"
+    )
+    label_col = "label"
+
+    def _label(self, col: Column) -> Column:
+        return geo_blocking_label(col)
+
+    def _singles(self, batch_df: DataFrame, batch_id: int) -> DataFrame:
+        # the Settlement default fires for every wave EXCEPT the initial one
+        return geo_singletons(
+            batch_df.withColumn("types", F.array(F.lit("no_type"))),
+            settlement_default=batch_id > 0,
+        ).withColumnRenamed("rid", "cluster_rid")
+
+    def _merge(self, workset: DataFrame) -> DataFrame:
+        ws = workset.withColumnRenamed("cluster_rid", "rid")
+        # source→bit map from this workset (encoding only — selection needs
+        # source-SET disjointness, any stable per-batch assignment works)
+        srcs = sorted(
+            r[0] for r in ws.select(F.explode("sources")).distinct().collect()
+        )
+        bit_map = F.create_map(
+            *[c for i, s in enumerate(srcs) for c in (F.lit(s), F.lit(1 << i))]
+        )
+        return geo_cluster_wave(ws, bit_map).withColumnRenamed("rid", "cluster_rid")

@@ -28,7 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mapping_analysis_spark.session import get_spark  # noqa: E402
-from mapping_analysis_spark.streaming.music_job import MusicIncrementalJob  # noqa: E402
+from mapping_analysis_spark.streaming.wave_job import MusicIncrementalJob  # noqa: E402
 
 
 def _label4(blk: int) -> str:

@@ -59,7 +59,7 @@ def main(work_dir: str) -> int:
 
     from mapping_analysis_spark.geo import parse_geo_splits, read_geo_vertices
     from mapping_analysis_spark.operators.evaluation import pair_quality
-    from mapping_analysis_spark.streaming.geo_job import GeoIncrementalJob
+    from mapping_analysis_spark.streaming.wave_job import GeoIncrementalJob
 
     shutil.rmtree(work_dir, ignore_errors=True)
     waves_dir = os.path.join(work_dir, "waves")

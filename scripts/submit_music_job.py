@@ -51,7 +51,7 @@ def main(work_dir: str) -> int:
 
     from mapping_analysis_spark.music import music_records
     from mapping_analysis_spark.operators.evaluation import pair_quality
-    from mapping_analysis_spark.streaming.music_job import MusicIncrementalJob
+    from mapping_analysis_spark.streaming.wave_job import MusicIncrementalJob
 
     shutil.rmtree(work_dir, ignore_errors=True)
     waves_dir = os.path.join(work_dir, "waves")

@@ -5,7 +5,9 @@ The geography analogue of ``test_music_streaming.py``: the reference's
 ``GeoIncrementalJob`` (foreachBatch + versioned state tables) and the final
 sink table must equal the batch driver loop
 (``geo.geo_incremental_quality``) row-for-row, landing on the published
-incremental anchor (P 0.9961 / R 0.9406 / F1 0.9676)."""
+incremental anchor (P 0.9961 / R 0.9406 / F1 0.9676). Only that test needs
+the reference fixture; the stream == batch, replay and crash-replay tests on
+the inline waves run everywhere."""
 
 from __future__ import annotations
 
@@ -28,7 +30,7 @@ JAVA_TEST = (
     "integration/IncrementalGeoClusteringTest.java"
 )
 
-pytestmark = pytest.mark.skipif(
+needs_fixture = pytest.mark.skipif(
     not os.path.exists(GEO_VERTICES), reason="reference geography fixture not available"
 )
 
@@ -40,26 +42,13 @@ WAVES = [
 ]
 
 
-def _write_waves(spark, out_dir: str) -> None:
-    from mapping_analysis_spark.geo import parse_geo_splits, read_geo_vertices
-
-    splits = parse_geo_splits(JAVA_TEST)
-    raw = read_geo_vertices(spark, GEO_VERTICES, map_types=False)
+def _write_arrivals(waves, out_dir: str) -> None:
+    """One parquet file per wave, mtime-ordered so the file stream triggers
+    them in wave order."""
     os.makedirs(out_dir, exist_ok=True)
-    for i, (names, _) in enumerate(WAVES):
-        ids = [x for n in names for x in splits[n]]
-        w = raw.join(
-            spark.createDataFrame([(x,) for x in ids], "rid long"),
-            "rid",
-            "left_semi",
-        )
+    for i, w in enumerate(waves):
         tmp = os.path.join(out_dir, f"_w{i}")
-        (
-            w.select("rid", "label", "lat", "lon", "source")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
+        w.coalesce(1).write.mode("overwrite").parquet(tmp)
         part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
         final = os.path.join(out_dir, f"wave_{i}.parquet")
         os.replace(os.path.join(tmp, part), final)
@@ -67,6 +56,24 @@ def _write_waves(spark, out_dir: str) -> None:
         shutil.rmtree(tmp)
 
 
+def _write_waves(spark, out_dir: str) -> None:
+    from mapping_analysis_spark.geo import parse_geo_splits, read_geo_vertices
+
+    splits = parse_geo_splits(JAVA_TEST)
+    raw = read_geo_vertices(spark, GEO_VERTICES, map_types=False)
+    waves = []
+    for names, _ in WAVES:
+        ids = [x for n in names for x in splits[n]]
+        w = raw.join(
+            spark.createDataFrame([(x,) for x in ids], "rid long"),
+            "rid",
+            "left_semi",
+        )
+        waves.append(w.select("rid", "label", "lat", "lon", "source"))
+    _write_arrivals(waves, out_dir)
+
+
+@needs_fixture
 def test_geo_splits_stream_to_batch_parity(spark, tmp_path):
     from mapping_analysis_spark.geo import (
         geo_cluster_wave,
@@ -75,7 +82,7 @@ def test_geo_splits_stream_to_batch_parity(spark, tmp_path):
         read_geo_vertices,
     )
     from mapping_analysis_spark.operators.evaluation import pair_quality
-    from mapping_analysis_spark.streaming.geo_job import GeoIncrementalJob
+    from mapping_analysis_spark.streaming.wave_job import GeoIncrementalJob
 
     waves_dir = str(tmp_path / "waves")
     _write_waves(spark, waves_dir)
@@ -140,7 +147,7 @@ def test_geo_splits_stream_to_batch_parity(spark, tmp_path):
 
 def test_geo_job_replay_is_noop(spark, tmp_path):
     """Exactly-once: re-invoking a committed batch does not change state."""
-    from mapping_analysis_spark.streaming.geo_job import GeoIncrementalJob
+    from mapping_analysis_spark.streaming.wave_job import GeoIncrementalJob
 
     job = GeoIncrementalJob(spark, str(tmp_path / "state2"))
     wave = spark.createDataFrame(
@@ -226,17 +233,71 @@ def _geo_state(job):
     return out
 
 
-@pytest.mark.parametrize("crash_at", ["reps", "rep_blocks", "assignments", "dirty"])
-def test_geo_job_mid_batch_crash_replay(spark, tmp_path, crash_at):
-    """Kill geo batch 1 just before the ``crash_at`` table commits; replay +
-    batch 2 must converge to the uninterrupted run's full state."""
-    from mapping_analysis_spark.streaming.geo_job import GeoIncrementalJob
+def test_geo_synthetic_waves_stream_to_batch_parity(spark, tmp_path):
+    """The inline waves as arrival files through ``start()`` (file stream,
+    one wave per trigger) end on the batch loop's final assignment."""
+    from mapping_analysis_spark.geo import geo_cluster_wave, geo_singletons
+    from mapping_analysis_spark.streaming.wave_job import GeoIncrementalJob
 
     waves = _geo_waves(spark)
-    ref = GeoIncrementalJob(spark, str(tmp_path / "ref"))
+    waves_dir = str(tmp_path / "waves")
+    _write_arrivals(waves, waves_dir)
+
+    job = GeoIncrementalJob(spark, str(tmp_path / "state"))
+    job.start(waves_dir, str(tmp_path / "ckpt")).awaitTermination(600)
+    stream_assign = {
+        (int(r["rid"]), int(r["cluster_rid"])) for r in job.result().collect()
+    }
+
+    sources = sorted(
+        {r["source"] for w in waves for r in w.select("source").collect()}
+    )
+    bit_map = F.create_map(
+        *[c for i, s in enumerate(sources) for c in (F.lit(s), F.lit(1 << i))]
+    )
+    reps = None
     for i, w in enumerate(waves):
+        singles = geo_singletons(
+            w.withColumn("types", F.array(F.lit("no_type"))),
+            settlement_default=i > 0,
+        )
+        workset = singles if reps is None else reps.unionByName(singles)
+        reps = geo_cluster_wave(workset, bit_map).localCheckpoint(eager=True)
+    batch_assign = {
+        (int(r["rid"]), int(r["cluster_rid"]))
+        for r in reps.select(
+            F.col("rid").alias("cluster_rid"), F.explode("members").alias("rid")
+        )
+        .select("rid", "cluster_rid")
+        .collect()
+    }
+
+    assert stream_assign == batch_assign
+    # later waves join earlier clusters: 6 → 1, 8 → 4, 9 → 7
+    assert stream_assign == {
+        (1, 1), (2, 1), (3, 3), (4, 4), (5, 4), (6, 1), (7, 7), (8, 4), (9, 7)
+    }
+
+
+@pytest.fixture(scope="module")
+def geo_ref_state(spark, tmp_path_factory):
+    """Full state of the uninterrupted run over ``_geo_waves``."""
+    from mapping_analysis_spark.streaming.wave_job import GeoIncrementalJob
+
+    ref = GeoIncrementalJob(spark, str(tmp_path_factory.mktemp("geo_ref")))
+    for i, w in enumerate(_geo_waves(spark)):
         ref.process_batch(w, i)
-    want = _geo_state(ref)
+    return _geo_state(ref)
+
+
+@pytest.mark.parametrize("crash_at", ["reps", "rep_blocks", "assignments", "dirty"])
+def test_geo_job_mid_batch_crash_replay(spark, tmp_path, crash_at, geo_ref_state):
+    """Kill geo batch 1 just before the ``crash_at`` table commits; replay +
+    batch 2 must converge to the uninterrupted run's full state."""
+    from mapping_analysis_spark.streaming.wave_job import GeoIncrementalJob
+
+    waves = _geo_waves(spark)
+    want = geo_ref_state
 
     job = GeoIncrementalJob(spark, str(tmp_path / "crash"))
     job.process_batch(waves[0], 0)

@@ -7,12 +7,15 @@ machinery — must meet. The waves stream as parquet micro-batches through
 final sink table must equal the batch driver loop
 (``music.music_incremental_quality``) row-for-row, landing on the published
 incremental anchor (P 0.98926 / R 0.88394 / F1 0.93364,
-``IncrementalMusicClusteringTest.java:104-115``).
+``IncrementalMusicClusteringTest.java:104-115``). Only that test needs the
+reference fixture; the stream == batch, replay and crash-replay tests on the
+inline waves run everywhere.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 
@@ -24,14 +27,28 @@ SPLIT_DIR = (
     "/root/reference/analysis-core/src/test/resources/data/musicbrainz/split"
 )
 
-pytestmark = pytest.mark.skipif(
+needs_fixture = pytest.mark.skipif(
     not os.path.exists(MUSIC_CSV), reason="reference MusicBrainz fixture not available"
 )
 
 
+def _write_arrivals(waves, out_dir: str) -> None:
+    """One parquet file per wave, mtime-ordered so the file stream triggers
+    them in wave order."""
+    os.makedirs(out_dir, exist_ok=True)
+    for i, w in enumerate(waves):
+        tmp = os.path.join(out_dir, f"_w{i}")
+        w.coalesce(1).write.mode("overwrite").parquet(tmp)
+        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
+        final = os.path.join(out_dir, f"wave_{i}.parquet")
+        os.replace(os.path.join(tmp, part), final)
+        os.utime(final, (1_000_000_000 + i * 1000,) * 2)
+        shutil.rmtree(tmp)
+
+
 def _write_waves(spark, out_dir: str) -> None:
-    """One parquet file per increment, mtime-ordered so the file stream
-    triggers them in phase order (80% → +10% → +source 5 → +final 10%)."""
+    """The real splits as arrival files in phase order (80% → +10% →
+    +source 5 → +final 10%)."""
     from pyspark.sql import functions as F
 
     from mapping_analysis_spark.music import music_records
@@ -47,28 +64,16 @@ def _write_waves(spark, out_dir: str) -> None:
         records.filter(F.col("source") == "5"),
         records.join(ids_from("lastTen.txt"), "rid", "left_semi"),
     ]
-    os.makedirs(out_dir, exist_ok=True)
-    for i, w in enumerate(waves):
-        tmp = os.path.join(out_dir, f"_w{i}")
-        (
-            w.select(
-                "rid",
-                F.col("artist_title_album").alias("ata"),
-                "smask",
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        final = os.path.join(out_dir, f"wave_{i}.parquet")
-        os.replace(os.path.join(tmp, part), final)
-        os.utime(final, (1_000_000_000 + i * 1000, 1_000_000_000 + i * 1000))
-        import shutil
-
-        shutil.rmtree(tmp)
+    _write_arrivals(
+        [
+            w.select("rid", F.col("artist_title_album").alias("ata"), "smask")
+            for w in waves
+        ],
+        out_dir,
+    )
 
 
+@needs_fixture
 def test_music_splits_stream_to_batch_parity(spark, tmp_path):
     from pyspark.sql import functions as F
 
@@ -77,7 +82,7 @@ def test_music_splits_stream_to_batch_parity(spark, tmp_path):
         music_records,
     )
     from mapping_analysis_spark.operators.evaluation import pair_quality
-    from mapping_analysis_spark.streaming.music_job import MusicIncrementalJob
+    from mapping_analysis_spark.streaming.wave_job import MusicIncrementalJob
 
     waves_dir = str(tmp_path / "waves")
     _write_waves(spark, waves_dir)
@@ -210,19 +215,71 @@ def _music_state(job):
     return out
 
 
+@pytest.fixture(scope="module")
+def music_ref_state(spark, tmp_path_factory):
+    """Full state of the uninterrupted run over ``_music_waves``."""
+    from mapping_analysis_spark.streaming.wave_job import MusicIncrementalJob
+
+    ref = MusicIncrementalJob(spark, str(tmp_path_factory.mktemp("music_ref")))
+    for i, w in enumerate(_music_waves(spark)):
+        ref.process_batch(w, i)
+    return _music_state(ref)
+
+
+def test_music_synthetic_waves_stream_to_batch_parity(spark, tmp_path):
+    """The inline waves as arrival files through ``start()`` (file stream,
+    one wave per trigger) end on the batch loop's final assignment."""
+    from pyspark.sql import functions as F
+
+    from mapping_analysis_spark.music import _merge_reps, _rep_blocked_scored_edges
+    from mapping_analysis_spark.streaming.wave_job import MusicIncrementalJob
+
+    waves = _music_waves(spark)
+    waves_dir = str(tmp_path / "waves")
+    _write_arrivals(waves, waves_dir)
+
+    job = MusicIncrementalJob(spark, str(tmp_path / "state"))
+    job.start(waves_dir, str(tmp_path / "ckpt")).awaitTermination(600)
+    stream_assign = {
+        (int(r["rid"]), int(r["cluster_rid"])) for r in job.result().collect()
+    }
+
+    reps = None
+    for w in waves:
+        singles = w.select(
+            F.col("rid").alias("cluster_rid"),
+            "ata",
+            "smask",
+            F.array(F.col("rid")).alias("members"),
+        )
+        workset = singles if reps is None else reps.unionByName(singles)
+        reps = _merge_reps(
+            workset, _rep_blocked_scored_edges(workset, 4)
+        ).localCheckpoint(eager=True)
+    batch_assign = {
+        (int(r["rid"]), int(r["cluster_rid"]))
+        for r in reps.select(
+            "cluster_rid", F.explode("members").alias("rid")
+        ).collect()
+    }
+
+    assert stream_assign == batch_assign
+    # later waves join earlier clusters: 6 → 1, 8 → 4, 9 → 7
+    assert stream_assign == {
+        (1, 1), (2, 1), (3, 3), (4, 4), (5, 4), (6, 1), (7, 7), (8, 4), (9, 7)
+    }
+
+
 @pytest.mark.parametrize("crash_at", ["reps", "rep_blocks", "assignments", "dirty"])
-def test_music_job_mid_batch_crash_replay(spark, tmp_path, crash_at):
+def test_music_job_mid_batch_crash_replay(spark, tmp_path, crash_at, music_ref_state):
     """Kill music batch 1 just before the ``crash_at`` table commits;
     replay + batch 2 must converge to the uninterrupted run's full state
     (the version-pinned pre-commit reads at work on the music commit
     order reps → rep_blocks → assignments → dirty)."""
-    from mapping_analysis_spark.streaming.music_job import MusicIncrementalJob
+    from mapping_analysis_spark.streaming.wave_job import MusicIncrementalJob
 
     waves = _music_waves(spark)
-    ref = MusicIncrementalJob(spark, str(tmp_path / "ref"))
-    for i, w in enumerate(waves):
-        ref.process_batch(w, i)
-    want = _music_state(ref)
+    want = music_ref_state
 
     job = MusicIncrementalJob(spark, str(tmp_path / "crash"))
     job.process_batch(waves[0], 0)
@@ -244,7 +301,7 @@ def test_music_job_replay_is_noop(spark, tmp_path):
     """Exactly-once: re-invoking a committed batch does not change state."""
     from pyspark.sql import functions as F
 
-    from mapping_analysis_spark.streaming.music_job import MusicIncrementalJob
+    from mapping_analysis_spark.streaming.wave_job import MusicIncrementalJob
 
     job = MusicIncrementalJob(spark, str(tmp_path / "state2"))
     wave = spark.createDataFrame(
@@ -281,7 +338,7 @@ def test_music_job_increment_reads_o_dirty_not_o_state(spark, tmp_path):
     labels resolves only those blocks' state rows, not the full tables
     (``scripts/music_state_scaling.py`` measures the same property at 40-80k
     records: the increment read volume is flat while total state doubles)."""
-    from mapping_analysis_spark.streaming.music_job import MusicIncrementalJob
+    from mapping_analysis_spark.streaming.wave_job import MusicIncrementalJob
 
     def label4(blk):
         out = []
