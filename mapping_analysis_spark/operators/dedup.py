@@ -8,8 +8,6 @@ second, so small-scale output equals the brute-force oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -24,25 +22,24 @@ from mapping_analysis_spark.operators.blocking import lsh_band_pairs
 # Dense-bitset route gates (see minhash_lsh_dedup): the route is taken only
 # when the corpus' distinct-shingle vocabulary is small enough that every
 # document's shingle set fits in a short bitmask AND the whole mask table
-# fits in one comfortable broadcast. Both are env-parameterised so cluster
-# deployments can raise them with executor memory; the *decision* only picks
-# between two exact plans, so it can never change results.
-DENSE_VOCAB_MAX = int(os.environ.get("SPARK_GRAFT_DENSE_VOCAB_MAX", "32768"))
-DENSE_MASK_MB = int(os.environ.get("SPARK_GRAFT_DENSE_MASK_MB", "256"))
+# fits in one comfortable broadcast. The *decision* only picks between two
+# exact plans, so it can never change results.
+DENSE_VOCAB_MAX = 32768
+DENSE_MASK_MB = 256
 # Always-dense floor: below this GEMM work (n²/2 × |vocab| multiply-adds)
 # the dense scan is trivially cheap and is taken without estimating LSH's
 # cost; above it the sample-based cost comparison decides (see
 # _dense_vocab_or_none). Plan choice only — both plans are exact.
-DENSE_GEMM_GFLOP_MAX = float(os.environ.get("SPARK_GRAFT_DENSE_GEMM_GFLOP_MAX", "50"))
+DENSE_GEMM_GFLOP_MAX = 50.0
 # cost-model exchange rate above the always-cheap GEMM budget: one banded-LSH
 # candidate pair costs ~the same wall time as this many GEMM flops (hash-set
 # intersection + shuffle vs dense fused multiply-add); used to pick the
 # cheaper of the two exact plans when both are expensive
-DENSE_FLOP_PER_CAND = float(os.environ.get("SPARK_GRAFT_DENSE_FLOP_PER_CAND", "7500"))
+DENSE_FLOP_PER_CAND = 7500.0
 # per-worker budget for caching the fully-unpacked float32 mask matrix
 # across tasks AND invocations (reused Python workers, guide §4.5); keyed by
 # a content digest so a stale cache can never serve wrong data
-DENSE_UNPACK_CACHE_MB = int(os.environ.get("SPARK_GRAFT_DENSE_UNPACK_CACHE_MB", "512"))
+DENSE_UNPACK_CACHE_MB = 512
 _DENSE_UNPACK_CACHE: dict = {}
 # sample this many docs for the cheap pre-gate; a high-entropy corpus blows
 # the vocab budget within the sample and skips the full distinct pass

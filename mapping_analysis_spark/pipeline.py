@@ -29,10 +29,7 @@ from pyspark.sql import functions as F
 from mapping_analysis_spark.functions.simfns import minhash, shingle_hashes
 from mapping_analysis_spark.functions.text import blocking_key, normalize_text
 from mapping_analysis_spark.operators.blocking import lsh_band_pairs
-from mapping_analysis_spark.operators.clustering import (
-    assign_cluster_ids,
-    representatives,
-)
+from mapping_analysis_spark.operators.clustering import assign_cluster_ids
 
 # Measured on the seeded corpus (scripts in git history): false-pair token
 # Jaccard tops out ~0.15, true pairs start ~0.46 (p01) — 0.35 separates with
@@ -322,11 +319,3 @@ def dedup_conversations(
     return assign.join(sizes, "cluster_id").select(
         "conv_id", "cluster_id", "cluster_size"
     )
-
-
-def representative_transcripts(
-    transcripts: DataFrame, threshold: float = DEFAULT_THRESHOLD
-) -> DataFrame:
-    """Match + cluster, then emit one majority-vote transcript per cluster."""
-    assign = match_conversations(transcripts, threshold=threshold)
-    return representatives(assign, transcripts)

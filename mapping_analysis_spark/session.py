@@ -75,10 +75,7 @@ def get_spark(
         # GC events, which a big mostly-idle heap rarely triggers — force a
         # periodic sweep so block-manager memory stays flat (measured: the
         # 45-query bench drifted ~20-40% slower in its later passes without)
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "2min"),
-        )
+        .config("spark.cleaner.periodicGC.interval", "2min")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -86,10 +83,7 @@ def get_spark(
         # executors (checkpoint-block locality), but 0 forces remote fetches
         # of localCheckpoint blocks; 500ms balances both (measured on the
         # local-cluster scaling matrix, see BENCH.md)
-        .config(
-            "spark.locality.wait",
-            os.environ.get("SPARK_GRAFT_LOCALITY_WAIT", "500ms"),
-        )
+        .config("spark.locality.wait", "500ms")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

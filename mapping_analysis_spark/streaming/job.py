@@ -49,10 +49,12 @@ batches skip), so a job killed at any point resumes from the Spark
 checkpoint and produces the identical final table — verified by
 ``tests/test_streaming_parity.py`` against the batch oracle. Flat per-batch
 scan volume on a growing state is asserted by
-``tests/test_streaming_scan_volume.py``.
+``tests/test_streaming_scan_volume.py``. That protocol is ``ExactlyOnceJob``,
+written once here for this job and the music and geo wave jobs of
+``streaming/wave_job.py``.
 
-Invariant (BASELINE.json north_rule): for the same input stream + watermark
-the final sink equals the batch pipeline row-for-row under stable
+Invariant (BASELINE.json north_rule): for the same input stream the final
+sink equals the batch pipeline row-for-row under stable
 ``(conv_id, turn_idx)`` ordering.
 """
 
@@ -81,6 +83,7 @@ from mapping_analysis_spark.pipeline import (
     DEFAULT_THRESHOLD,
     conversation_records,
     featurize_records,
+    jaccard_ge,
 )
 from mapping_analysis_spark.streaming.sinks import SnapshotStateTable
 
@@ -95,74 +98,50 @@ TRANSCRIPT_SCHEMA = StructType(
     ]
 )
 
+_STATE_BUCKETS = 16
+# history pruning is pure-filesystem maintenance — amortized
+_PRUNE_EVERY = 4
 
-class IncrementalClusteringJob:
-    """Stateful incremental matcher/clusterer driven by foreachBatch."""
+
+class ExactlyOnceJob:
+    """The exactly-once micro-batch protocol under every streaming job.
+
+    A job declares four things: the arrival-file ``schema``, the batch dedup
+    ``key``, its state ``tables`` as ``(name, bucket_by)`` in commit order
+    (each becomes an attribute of that name; the output table is
+    ``assignments``) and the per-batch kernel ``_apply``. The LAST table in
+    commit order is the batch's replay gate: it commits last, so its marker
+    means the whole batch is in (earlier tables skip individually when a
+    batch killed between commits replays)."""
+
+    schema: StructType | str
+    key: list[str]
+    tables: list[tuple[str, list[str]]]
 
     def __init__(
-        self,
-        spark: SparkSession,
-        state_dir: str,
-        threshold: float = DEFAULT_THRESHOLD,
-        block_length: int = DEFAULT_BLOCK_LENGTH,
-        lsh_bands: int = DEFAULT_LSH_BANDS,
-        max_block_size: int = DEFAULT_MAX_BLOCK_SIZE,
-        state_buckets: int = 16,
-        track_scans: bool = False,
+        self, spark: SparkSession, state_dir: str, track_scans: bool = False
     ) -> None:
         self.spark = spark
-        self.threshold = threshold
-        self.block_length = block_length
-        self.lsh_bands = lsh_bands
-        self.max_block_size = max_block_size
-
-        def tbl(name: str, bucket_by: list[str]) -> SnapshotStateTable:
-            return SnapshotStateTable(
+        self._tables: list[SnapshotStateTable] = []
+        for name, bucket_by in self.tables:
+            st = SnapshotStateTable(
                 spark,
                 state_dir,
                 name,
                 bucket_by=bucket_by,
-                num_buckets=state_buckets,
+                num_buckets=_STATE_BUCKETS,
                 track_scans=track_scans,
             )
-
-        self.turns = tbl("turns", ["conv_id"])
-        self.records = tbl("records", ["rid"])
-        self.blocks = tbl("blocks", ["bk"])
-        self.block_sizes = tbl("block_sizes", ["bk"])
-        self.bands = tbl("bands", ["band_hash"])
-        self.edges = tbl("edges", ["u"])  # doubled: (u,v) and (v,u)
-        self.node_comp = tbl("node_comp", ["node"])
-        self.comp_members = tbl("comp_members", ["comp"])
-        self.assignments = tbl("assignments", ["conv_id"])
+            setattr(self, name, st)
+            self._tables.append(st)
         self.metrics_path = os.path.join(state_dir, "metrics.jsonl")
-        # history pruning is pure-filesystem maintenance — amortized
-        self.prune_every = 4
-
-    @property
-    def _tables(self) -> list[SnapshotStateTable]:
-        return [
-            self.turns, self.records, self.blocks, self.block_sizes, self.bands,
-            self.edges, self.node_comp, self.comp_members, self.assignments,
-        ]
-
-    # -- small helpers --------------------------------------------------------
 
     def _empty(self, schema: str) -> DataFrame:
         return self.spark.createDataFrame([], schema)
 
-    @staticmethod
-    def _canon(df: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
-        return df.select(
-            F.least(u, v).alias("a"), F.greatest(u, v).alias("b")
-        ).dropDuplicates(["a", "b"])
-
-    @staticmethod
-    def _double(df: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
-        fwd = df.select(F.col(a).alias("u"), F.col(b).alias("v"))
-        return fwd.union(df.select(F.col(b).alias("u"), F.col(a).alias("v")))
-
-    # -- per-batch kernel ---------------------------------------------------
+    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
+        """Commit one non-empty, deduplicated batch to every state table."""
+        raise NotImplementedError
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """One micro-batch. Driver-overhead budget (What's wrong #3, round 3):
@@ -178,21 +157,19 @@ class IncrementalClusteringJob:
           bucket-id job (``read_for(buckets=...)`` — bucket ids depend only
           on key values and the bucket count, identical across tables);
         * empty batches commit marker deltas with zero Spark jobs;
-        * history pruning runs every ``prune_every`` batches.
+        * history pruning runs every ``_PRUNE_EVERY`` batches.
 
-        ``metrics.jsonl`` records ``spark_jobs`` per batch (scoped job
-        group), so the fixed driver cost is observable per micro-batch."""
+        ``metrics.jsonl`` records ``spark_jobs`` per batch, so the fixed
+        driver cost is observable per micro-batch."""
         t0 = time.time()
-        sc = self.spark.sparkContext
-        group = self._job_counter()
-        sc.setJobGroup(f"microbatch-{batch_id}", f"incremental clustering micro-batch {batch_id}")
-        if self.assignments.committed(batch_id):
-            self._log(batch_id, 0, t0, replayed=True)
+        jobs0 = self._job_counter()
+        if self._tables[-1].committed(batch_id):
+            self._log(batch_id, 0, t0, jobs0, replayed=True)
             return  # exactly-once: replay after restart is a no-op
 
         batch_df = (
             batch_df.withColumn("_file", F.input_file_name())
-            .dropDuplicates(["conv_id", "turn_idx"])
+            .dropDuplicates(self.key)
             .localCheckpoint(eager=True)  # streaming source: consume in-call
         )
         # one fused job: row count + per-partition lineage sample
@@ -202,14 +179,118 @@ class IncrementalClusteringJob:
         ).collect()[0]
         n_rows = int(head["n"])
         input_files = [f for f in head["files"] if f]
-        batch_df = batch_df.drop("_file")
         if n_rows == 0:
             # empty deltas keep replay detection monotonic at zero data cost
             for st in self._tables:
                 st.commit_unchanged(batch_id)
-            self._log(batch_id, 0, t0, group=group)
+            self._log(batch_id, 0, t0, jobs0)
             return
 
+        self._apply(batch_df.drop("_file"), batch_id)
+        if batch_id % _PRUNE_EVERY == _PRUNE_EVERY - 1:
+            for st in self._tables:
+                st.prune(keep_last=3)
+        self._log(batch_id, n_rows, t0, jobs0, input_files)
+
+    # -- metrics (north rule: per-partition lineage + throughput per batch) --
+
+    def scan_stats(self, reset: bool = False) -> dict:
+        """Aggregated pruned-read volume across all state tables."""
+        tot = {"read_rows": 0, "read_calls": 0, "compact_rows": 0}
+        for st in self._tables:
+            s = st.reset_scan_stats() if reset else st.scan_stats
+            for k in tot:
+                tot[k] += s[k]
+        return tot
+
+    def _job_counter(self) -> int | None:
+        """Monotonic count of Spark jobs submitted so far this session."""
+        try:
+            return int(self.spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+        except Exception:
+            return None
+
+    def _log(
+        self,
+        batch_id: int,
+        n_rows: int,
+        t0: float,
+        jobs0: int | None,
+        input_files: list[str] | None = None,
+        replayed: bool = False,
+    ) -> None:
+        """One ``metrics.jsonl`` line, the same keys for every batch."""
+        dur = time.time() - t0
+        # fixed driver overhead per micro-batch = Spark jobs submitted during
+        # this batch (monotonic DAGScheduler job-id counter delta — a scoped
+        # job group misattributes inside foreachBatch callback threads)
+        jobs = self._job_counter()
+        rec = {
+            "batch_id": batch_id,
+            "rows": n_rows,
+            "seconds": round(dur, 3),
+            "rows_per_sec": round(n_rows / dur, 1) if dur > 0 else None,
+            "replayed": replayed,
+            "lineage_files": (input_files or [])[:20],
+            "spark_jobs": None if jobs is None or jobs0 is None else jobs - jobs0,
+        }
+        with open(self.metrics_path, "a") as f:
+            f.write(json.dumps(rec) + "\n")
+
+    # -- stream wiring --------------------------------------------------------
+
+    def start(
+        self, input_dir: str, checkpoint_dir: str, max_files_per_trigger: int = 1
+    ):
+        """Wire the parquet file stream (Iceberg-source stand-in, one file
+        per increment) to the batch kernel — the reference's per-increment
+        Flink job restarts become micro-batch triggers."""
+        stream = (
+            self.spark.readStream.schema(self.schema)
+            .option("maxFilesPerTrigger", max_files_per_trigger)
+            .parquet(input_dir)
+        )
+        return (
+            stream.writeStream.foreachBatch(self.process_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    def result(self) -> DataFrame | None:
+        """Final assignment table."""
+        return self.assignments.read()
+
+
+class IncrementalClusteringJob(ExactlyOnceJob):
+    """Stateful incremental transcript matcher/clusterer."""
+
+    schema = TRANSCRIPT_SCHEMA
+    key = ["conv_id", "turn_idx"]
+    tables = [
+        ("turns", ["conv_id"]),
+        ("records", ["rid"]),
+        ("blocks", ["bk"]),
+        ("bands", ["band_hash"]),
+        ("block_sizes", ["bk"]),
+        ("edges", ["u"]),  # doubled: (u,v) and (v,u)
+        ("node_comp", ["node"]),
+        ("comp_members", ["comp"]),
+        ("assignments", ["conv_id"]),
+    ]
+
+    @staticmethod
+    def _canon(df: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
+        return df.select(
+            F.least(u, v).alias("a"), F.greatest(u, v).alias("b")
+        ).dropDuplicates(["a", "b"])
+
+    @staticmethod
+    def _double(df: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
+        fwd = df.select(F.col(a).alias("u"), F.col(b).alias("v"))
+        return fwd.union(df.select(F.col(b).alias("u"), F.col(a).alias("v")))
+
+    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
         # 1-2. turn state + affected conversations (pruned read: only the
         # buckets holding the affected conversations are scanned; turns and
         # records share the bucket-id job — same key values)
@@ -237,12 +318,12 @@ class IncrementalClusteringJob:
         # without scanning the posting lists.
         recs_full = featurize_records(
             conversation_records(turns_aff),
-            lsh_bands=self.lsh_bands,
-            block_length=self.block_length,
+            lsh_bands=DEFAULT_LSH_BANDS,
+            block_length=DEFAULT_BLOCK_LENGTH,
         )
         recs_full = recs_full.select(
             "rid", "source", "bks", "toks",
-            band_keys("minhash", self.lsh_bands).alias("bands"),
+            band_keys("minhash", DEFAULT_LSH_BANDS).alias("bands"),
         ).localCheckpoint(eager=False)
         self.records.upsert(recs_full, ["rid"], batch_id)
 
@@ -307,7 +388,7 @@ class IncrementalClusteringJob:
         # max_block_size (either direction), every member's edge set must be
         # re-derived so the final edge set equals the batch pipeline's on the
         # final records (prefix pairs appear/disappear).
-        cap = self.max_block_size
+        cap = DEFAULT_MAX_BLOCK_SIZE
         crossed = sized.filter(
             (F.col("n_old") <= cap) != (F.col("n_new") <= cap)
         ).select("bk")
@@ -393,14 +474,12 @@ class IncrementalClusteringJob:
             F.col("source").alias("b_source"),
             F.col("toks").alias("b_toks"),
         )
-        from mapping_analysis_spark.pipeline import jaccard_ge
-
         e_new = (
             cand.join(ra, "a_rid")
             .join(rb, "b_rid")
             .filter(
                 (F.col("a_source") != F.col("b_source"))
-                & jaccard_ge(F.col("a_toks"), F.col("b_toks"), self.threshold)
+                & jaccard_ge(F.col("a_toks"), F.col("b_toks"), DEFAULT_THRESHOLD)
             )
             .select(F.col("a_rid").alias("a"), F.col("b_rid").alias("b"))
         )
@@ -475,74 +554,3 @@ class IncrementalClusteringJob:
             F.col("node").alias("conv_id"), F.col("comp").alias("cluster_id")
         )
         self.assignments.upsert(updates, ["conv_id"], batch_id)
-        if self.prune_every and batch_id % self.prune_every == self.prune_every - 1:
-            for st in self._tables:
-                st.prune(keep_last=3)
-        self._log(batch_id, n_rows, t0, input_files=input_files, group=group)
-
-    # -- metrics (north rule: per-partition lineage + throughput per batch) --
-
-    def scan_stats(self, reset: bool = False) -> dict:
-        """Aggregated pruned-read volume across all state tables."""
-        tot = {"read_rows": 0, "read_calls": 0, "compact_rows": 0}
-        for st in self._tables:
-            s = st.reset_scan_stats() if reset else st.scan_stats
-            for k in tot:
-                tot[k] += s[k]
-        return tot
-
-    def _job_counter(self) -> int | None:
-        """Monotonic count of Spark jobs submitted so far this session."""
-        try:
-            return int(self.spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
-        except Exception:
-            return None
-
-    def _log(self, batch_id: int, n_rows: int, t0: float, replayed: bool = False,
-             input_files: list[str] | None = None, group: int | None = None) -> None:
-        dur = time.time() - t0
-        rec = {
-            "batch_id": batch_id,
-            "rows": n_rows,
-            "seconds": round(dur, 3),
-            "rows_per_sec": round(n_rows / dur, 1) if dur > 0 else None,
-            "replayed": replayed,
-            "lineage_files": (input_files or [])[:20],
-        }
-        if group is not None:
-            # fixed driver overhead per micro-batch = Spark jobs submitted
-            # during this batch (monotonic DAGScheduler job-id counter delta
-            # — the scoped-job-group tracker misattributes inside foreachBatch
-            # callback threads). What's wrong #3, round 3.
-            jobs = self._job_counter()
-            if jobs is not None and group is not None:
-                rec["spark_jobs"] = jobs - group
-        with open(self.metrics_path, "a") as f:
-            f.write(json.dumps(rec) + "\n")
-
-    # -- stream wiring --------------------------------------------------------
-
-    def start(
-        self,
-        input_dir: str,
-        checkpoint_dir: str,
-        max_files_per_trigger: int = 1,
-        watermark: str = "1 hour",
-    ):
-        """Wire the file stream (Iceberg-source stand-in) to the batch kernel."""
-        stream = (
-            self.spark.readStream.schema(TRANSCRIPT_SCHEMA)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(input_dir)
-            .withWatermark("ts", watermark)
-        )
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    def result(self) -> DataFrame | None:
-        """Final (conv_id, cluster_id) assignment table."""
-        return self.assignments.read()

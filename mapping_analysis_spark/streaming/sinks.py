@@ -36,7 +36,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 _OP = "_op"  # 'u' upsert, 'd' delete tombstone
@@ -227,13 +227,6 @@ class SnapshotStateTable:
         keys = [c for c in df.columns if c.startswith("_k_")]
         drop = set() if keep_meta else ({_OP, _BATCH} | (set() if keep_bucket else {_BUCKET}))
         w_cols = [c for c in df.columns if c not in drop]
-        if not keys:
-            # keyless (full-snapshot) table: the newest base IS the state;
-            # deltas on keyless tables are only the empty commit_unchanged
-            # markers
-            return df.filter(F.col(_OP) == "u").select(*w_cols)
-        from pyspark.sql import Window
-
         w = Window.partitionBy(*keys).orderBy(F.col(_BATCH).desc())
         return (
             df.withColumn("_rn", F.row_number().over(w))
@@ -377,14 +370,6 @@ class SnapshotStateTable:
     def upsert(self, new_rows: DataFrame, keys: list[str], batch_id: int) -> None:
         """MERGE: new rows win per key."""
         self.apply_delta(new_rows, None, keys, batch_id)
-
-    def commit(self, df: DataFrame, batch_id: int) -> None:
-        """Full-state commit (base snapshot). For state that is genuinely
-        recomputed wholesale; prefer ``apply_delta`` for keyed changes."""
-        if self.committed(batch_id):
-            return
-        tagged = self._tag(df, [], batch_id, "u")
-        self._atomic_write(tagged, self._dir("b", batch_id))
 
     def commit_unchanged(self, batch_id: int) -> None:
         """Mark a batch committed with zero data movement: a marker delta

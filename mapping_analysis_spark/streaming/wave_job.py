@@ -56,17 +56,15 @@ Commits run in the order ``reps`` → ``rep_blocks`` → ``assignments`` →
 ``dirty``; ``dirty`` commits last and is the batch's replay gate. Every read
 that feeds a later commit is pinned ``before_batch`` and every commit is
 idempotent per ``batch_id``, so a kill at any inter-commit boundary replays
-to the identical state (same machinery the transcript job proves in
-``tests/test_streaming_crash_replay.py``).
+to the identical state. The replay gate, batch prologue, empty-batch markers,
+pruning, ``metrics.jsonl`` and stream wiring are ``streaming/job.py``'s
+``ExactlyOnceJob``, shared with the transcript job (whose crash points
+``tests/test_streaming_crash_replay.py`` proves the same way).
 """
 
 from __future__ import annotations
 
-import json
-import os
-import time
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mapping_analysis_spark.geo import (
@@ -80,48 +78,24 @@ from mapping_analysis_spark.music import (
     _rep_blocked_scored_edges,
     music_blocking_label,
 )
-from mapping_analysis_spark.streaming.sinks import SnapshotStateTable
-
-_STATE_BUCKETS = 16
+from mapping_analysis_spark.streaming.job import ExactlyOnceJob
 
 
-class RepresentativeWaveJob:
+class RepresentativeWaveJob(ExactlyOnceJob):
     """Incremental MULTI representative clustering driven by foreachBatch.
     A domain subclass supplies the schemas, the blocking label and the
     ``_singles`` / ``_merge`` steps of the batch loop."""
 
-    wave_schema: str  # DDL of the arrival files
     rep_schema: str  # DDL of the ``reps`` table, keyed ``cluster_rid``
     label_col: str
-
-    def __init__(
-        self, spark: SparkSession, state_dir: str, track_scans: bool = False
-    ) -> None:
-        self.spark = spark
-
-        def tbl(name: str, bucket_by: list[str]) -> SnapshotStateTable:
-            return SnapshotStateTable(
-                spark,
-                state_dir,
-                name,
-                bucket_by=bucket_by,
-                num_buckets=_STATE_BUCKETS,
-                track_scans=track_scans,
-            )
-
-        self.reps = tbl("reps", ["cluster_rid"])
-        self.rep_blocks = tbl("rep_blocks", ["block"])
-        self.assignments = tbl("assignments", ["rid"])
-        self.dirty = tbl("dirty", ["block"])
-        self.metrics_path = os.path.join(state_dir, "metrics.jsonl")
-        self.prune_every = 4
-
-    @property
-    def _tables(self) -> list[SnapshotStateTable]:
-        return [self.reps, self.rep_blocks, self.assignments, self.dirty]
-
-    def _empty(self, schema: str) -> DataFrame:
-        return self.spark.createDataFrame([], schema)
+    key = ["rid"]
+    # ``dirty`` commits last: the batch's replay gate
+    tables = [
+        ("reps", ["cluster_rid"]),
+        ("rep_blocks", ["block"]),
+        ("assignments", ["rid"]),
+        ("dirty", ["block"]),
+    ]
 
     def _block(self, df: DataFrame) -> DataFrame:
         return df.select(self._label(F.col(self.label_col)).alias("block"))
@@ -141,23 +115,7 @@ class RepresentativeWaveJob:
 
     # -- per-batch kernel ----------------------------------------------------
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        t0 = time.time()
-        # the dirty table commits LAST → its marker is the batch's overall
-        # exactly-once gate (earlier tables skip individually on replay)
-        if self.dirty.committed(batch_id):
-            self._log(batch_id, 0, t0, replayed=True)
-            return
-
-        # streaming source: consume in-call
-        batch_df = batch_df.dropDuplicates(["rid"]).localCheckpoint(eager=True)
-        n_rows = batch_df.count()
-        if n_rows == 0:
-            for st in self._tables:
-                st.commit_unchanged(batch_id)
-            self._log(batch_id, 0, t0)
-            return
-
+    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
         singles = self._singles(batch_df, batch_id)
 
         # dirty labels = this wave's singleton labels ∪ labels left dirty by
@@ -242,58 +200,11 @@ class RepresentativeWaveJob:
         consumed = prev_dirty.join(next_dirty, "block", "left_anti")
         self.dirty.apply_delta(next_dirty, consumed, ["block"], batch_id)
 
-        if self.prune_every and batch_id % self.prune_every == self.prune_every - 1:
-            for st in self._tables:
-                st.prune(keep_last=3)
-        self._log(batch_id, n_rows, t0)
-
-    def _log(
-        self, batch_id: int, n_rows: int, t0: float, replayed: bool = False
-    ) -> None:
-        dur = time.time() - t0
-        rec = {
-            "batch_id": batch_id,
-            "rows": n_rows,
-            "seconds": round(dur, 3),
-            "rows_per_sec": round(n_rows / dur, 1) if dur > 0 else None,
-            "replayed": replayed,
-        }
-        with open(self.metrics_path, "a") as f:
-            f.write(json.dumps(rec) + "\n")
-
-    # -- stream wiring -------------------------------------------------------
-
-    def start(
-        self,
-        input_dir: str,
-        checkpoint_dir: str,
-        max_files_per_trigger: int = 1,
-    ):
-        """Wire a parquet wave stream (one file per increment) to the batch
-        kernel — the reference's per-increment Flink job restarts become
-        micro-batch triggers."""
-        stream = (
-            self.spark.readStream.schema(self.wave_schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .option("latestFirst", "false")
-            .parquet(input_dir)
-        )
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    def result(self) -> DataFrame | None:
-        """Final (rid, cluster_rid) assignment table."""
-        return self.assignments.read()
-
 
 class MusicIncrementalJob(RepresentativeWaveJob):
     """MusicBrainz waves: blocked trigram-cosine admission, majority ATA."""
 
-    wave_schema = "rid long, ata string, smask long"
+    schema = "rid long, ata string, smask long"
     rep_schema = "cluster_rid long, ata string, smask long, members array<long>"
     label_col = "ata"
 
@@ -319,7 +230,7 @@ class MusicIncrementalJob(RepresentativeWaveJob):
 class GeoIncrementalJob(RepresentativeWaveJob):
     """Settlement waves: GeoSimilarityFunction admission, GeographicMajority."""
 
-    wave_schema = "rid long, label string, lat double, lon double, source string"
+    schema = "rid long, label string, lat double, lon double, source string"
     rep_schema = (
         "cluster_rid long, label string, lat double, lon double, "
         "sources array<string>, members array<long>, types array<string>"

@@ -2,8 +2,8 @@
 "run via spark-submit --py-files on multi-executor clusters").
 
 Stages the transcripts into arrival files, streams them through
-``IncrementalClusteringJob`` (maxFilesPerTrigger=1, event-time watermark,
-checkpointed), then verifies the final exactly-once sink equals the batch
+``IncrementalClusteringJob`` (maxFilesPerTrigger=1, checkpointed), then
+verifies the final exactly-once sink equals the batch
 pipeline row-for-row — the BASELINE.json invariant.
 
 Launch (see scripts/submit.sh):

@@ -11,6 +11,7 @@ the inline waves run everywhere."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -178,6 +179,14 @@ def test_geo_job_replay_is_noop(spark, tmp_path):
         (int(r["rid"]), int(r["cluster_rid"])) for r in job.result().collect()
     }
     assert final == {(1, 1), (2, 1), (3, 3), (4, 1)}
+    # one metrics.jsonl schema for every line, the replayed one included
+    lines = [json.loads(x) for x in open(job.metrics_path)]
+    assert [x["replayed"] for x in lines] == [False, True, False]
+    keys = {
+        "batch_id", "rows", "seconds", "rows_per_sec", "replayed",
+        "lineage_files", "spark_jobs",
+    }
+    assert all(set(x) == keys for x in lines), lines
 
 
 class _Boom(RuntimeError):

@@ -5,11 +5,13 @@ driver contract, the scripts, the benchmark and the bench harnesses, this
 follows ``mapping_analysis_spark.*`` imports (and the packages they imply)
 through the package and fails on any module under ``mapping_analysis_spark/``
 that the walk never reaches — including one that only another orphan
-imports."""
+imports. A second guard keeps tuning knobs out of the environment: the engine
+reads only the deployment settings in ``DEPLOYMENT_ENV``."""
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -21,6 +23,10 @@ ALLOWED_TEST_ONLY = {
         "tests/test_streaming_parity.py::test_windowed_queries_streaming_parity"
     ),
 }
+
+
+# where to run: the only ``SPARK_GRAFT_*`` variables the engine may read
+DEPLOYMENT_ENV = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_SYNTH_DIR"}
 
 
 def _entry_points() -> list[Path]:
@@ -87,3 +93,13 @@ def test_allowlisted_modules_keep_their_contract_test():
         assert _module_path(mod) is not None, mod
         test_file, test_name = contract.split("::")
         assert f"def {test_name}(" in (ROOT / test_file).read_text(), contract
+
+
+def test_engine_reads_no_tuning_env_knobs():
+    knobs = sorted(
+        f"{f.relative_to(ROOT)}: {name}"
+        for f in (ROOT / PKG).rglob("*.py")
+        for name in set(re.findall(r"SPARK_GRAFT_\w+", f.read_text()))
+        if name not in DEPLOYMENT_ENV
+    )
+    assert not knobs, f"tuning knobs read from the environment: {knobs}"

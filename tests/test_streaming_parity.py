@@ -9,6 +9,7 @@ must converge to the same table (the reference's incremental replay fixtures,
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 
@@ -19,6 +20,7 @@ from mapping_analysis_spark.pipeline import match_conversations
 from mapping_analysis_spark.streaming.job import IncrementalClusteringJob
 from mapping_analysis_spark.streaming.windows import (
     session_turn_stats,
+    sliding_tool_rate,
     tumbling_role_counts,
 )
 
@@ -114,6 +116,14 @@ def test_batch_replay_is_idempotent(spark, transcripts_smoke, tmp_path):
     job.process_batch(batch, 0)  # replay
     assert job.assignments.latest_version() == v0
     assert _assign_set(job.result()) == before
+    # one metrics.jsonl schema for every line, the replayed one included
+    lines = [json.loads(x) for x in open(job.metrics_path)]
+    assert [x["replayed"] for x in lines] == [False, True]
+    keys = {
+        "batch_id", "rows", "seconds", "rows_per_sec", "replayed",
+        "lineage_files", "spark_jobs",
+    }
+    assert all(set(x) == keys for x in lines), lines
 
 
 def _run_windowed(spark, arrival_dir, builder, name, **kw):
@@ -137,10 +147,12 @@ def _run_windowed(spark, arrival_dir, builder, name, **kw):
 
 
 def test_windowed_queries_streaming_parity(spark, transcripts_smoke, arrival_dir):
-    """Tumbling + session window queries: streaming equals batch when the
-    watermark exceeds the maximum event lateness (no drops possible)."""
+    """Tumbling, sliding and session window queries: streaming equals batch
+    when the watermark exceeds the maximum event lateness (no drops
+    possible)."""
     for name, builder in [
         ("tumbling", tumbling_role_counts),
+        ("sliding", sliding_tool_rate),
         ("sessions", session_turn_stats),
     ]:
         got = _run_windowed(spark, arrival_dir, builder, name, watermark="48 hours")

@@ -71,9 +71,7 @@ def _batch_rows(b: int) -> list[tuple]:
 @pytest.fixture(scope="module")
 def scan_run(spark, tmp_path_factory):
     state = str(tmp_path_factory.mktemp("scanvol") / "state")
-    job = IncrementalClusteringJob(
-        spark, state, state_buckets=16, track_scans=True
-    )
+    job = IncrementalClusteringJob(spark, state, track_scans=True)
     per_batch, all_rows = [], []
     for b in range(N_BATCHES):
         rows = _batch_rows(b)
