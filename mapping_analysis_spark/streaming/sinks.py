@@ -19,9 +19,14 @@ Iceberg merge-on-read table:
   transform). ``read_for(keys)`` prunes to the partitions holding the
   requested keys, so per-batch READS are O(touched buckets), not O(total
   state) — asserted by ``tests/test_streaming_scan_volume.py``.
-* **Atomic, idempotent versions** — every directory commits via
-  write-to-tmp + atomic rename; a replayed batch (after failure/restart)
-  sees its version already committed and skips → exactly-once output.
+* **One commit point per micro-batch** — every table of a job shares one
+  :class:`CommitLog`, whose ``<state_dir>/_committed`` file holds the last
+  committed batch id and is replaced atomically once all of a batch's tables
+  are written (Flink's aligned-barrier checkpoint: all state of an epoch
+  becomes visible as one snapshot). A table shows only directories at or
+  below that id, plus the in-flight batch's own writes; what a killed
+  attempt wrote stays invisible and ``discard`` deletes it before the batch
+  runs again.
 * **Merge-on-read** — readers resolve the latest row per key across the
   base snapshot and newer deltas (latest batch wins; tombstones drop rows).
 * **Compaction** — after ``compact_every`` deltas a commit folds everything
@@ -51,29 +56,55 @@ def _has_parquet(d: str) -> bool:
     return False
 
 
-class SnapshotStateTable:
-    """Keyed state table with exactly-once delta commits (Iceberg
-    merge-on-read stand-in). Keys are fixed per table at first write.
+class CommitLog:
+    """The one commit point of a job's micro-batches, shared by all of its
+    state tables: ``<root>/_committed`` holds the last committed batch id.
+    ``in_flight`` is the batch being applied, whose writes its own later
+    reads must see before the marker lands."""
 
-    ``bucket_by`` (a subset of the key columns, required for ``read_for``)
-    enables Iceberg-style bucket partition pruning: directories are
-    partitioned on ``pmod(xxhash64(*bucket_by), num_buckets)`` and pruned
-    reads touch only the buckets of the requested keys."""
+    def __init__(self, root: str) -> None:
+        self.root = root
+        self.path = os.path.join(root, "_committed")
+        self.in_flight: int | None = None
+        os.makedirs(root, exist_ok=True)
+
+    def last(self) -> int:
+        """The last committed batch id, -1 before the first commit."""
+        try:
+            with open(self.path) as f:
+                return int(f.read())
+        except FileNotFoundError:
+            return -1
+
+    def commit(self, batch_id: int) -> None:
+        tmp = self.path + ".tmp"
+        with open(tmp, "w") as f:
+            f.write(str(batch_id))
+        os.replace(tmp, self.path)
+
+
+class SnapshotStateTable:
+    """Keyed state table with delta commits (Iceberg merge-on-read
+    stand-in) under ``<commits.root>/<name>``. Keys are fixed per table at
+    first write; ``bucket_by`` (a subset of them) partitions every directory
+    on ``pmod(xxhash64(*bucket_by), num_buckets)``, so pruned reads touch
+    only the buckets of the requested keys."""
 
     def __init__(
         self,
         spark: SparkSession,
-        root: str,
+        commits: CommitLog,
         name: str,
+        bucket_by: list[str],
         compact_every: int = 8,
-        bucket_by: list[str] | None = None,
         num_buckets: int = 32,
         track_scans: bool = False,
     ) -> None:
         self.spark = spark
-        self.root = os.path.join(root, name)
+        self.commits = commits
+        self.root = os.path.join(commits.root, name)
         self.compact_every = compact_every
-        self.bucket_by = list(bucket_by) if bucket_by else None
+        self.bucket_by = list(bucket_by)
         self.num_buckets = num_buckets
         self.track_scans = track_scans
         self.scan_stats = {"read_rows": 0, "read_calls": 0, "compact_rows": 0}
@@ -89,49 +120,40 @@ class SnapshotStateTable:
     def _dir(self, kind: str, batch_id: int) -> str:
         return os.path.join(self.root, f"{kind}{batch_id:010d}")
 
-    def _committed_dirs(self) -> list[tuple[str, int]]:
-        out = []
-        for d in os.listdir(self.root):
-            if (
-                len(d) == 11
-                and d[0] in ("b", "d")
-                and os.path.exists(os.path.join(self.root, d, "_SUCCESS"))
-            ):
-                out.append((d[0], int(d[1:])))
+    def _dirs(self) -> list[tuple[str, int]]:
+        """Every base/delta directory on disk, committed or not."""
+        out = [
+            (d[0], int(d[1:]))
+            for d in os.listdir(self.root)
+            if len(d) == 11 and d[0] in ("b", "d")
+        ]
         return sorted(out, key=lambda kd: kd[1])
 
+    def _visible_dirs(self) -> list[tuple[str, int]]:
+        last, live = self.commits.last(), self.commits.in_flight
+        return [(k, b) for k, b in self._dirs() if b <= last or b == live]
+
     def versions(self) -> list[int]:
-        return [b for _, b in self._committed_dirs()]
+        return [b for _, b in self._visible_dirs()]
 
-    def committed(self, batch_id: int) -> bool:
-        return os.path.exists(
-            os.path.join(self._dir("b", batch_id), "_SUCCESS")
-        ) or os.path.exists(os.path.join(self._dir("d", batch_id), "_SUCCESS"))
+    def discard(self) -> None:
+        """Delete what a killed attempt wrote: every directory above the
+        last committed batch."""
+        last = self.commits.last()
+        for kind, b in self._dirs():
+            if b > last:
+                shutil.rmtree(self._dir(kind, b))
 
-    def latest_version(self) -> int | None:
-        vs = self.versions()
-        return vs[-1] if vs else None
-
-    def _atomic_write(self, df: DataFrame, final: str) -> None:
-        tmp = final + ".tmp"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        if self.bucket_by and _BUCKET in df.columns:
-            # one task per bucket → ≤ num_buckets files per commit (a
-            # partitionBy write without the repartition writes
-            # tasks × buckets small files)
-            (
-                df.repartition(self.num_buckets, F.col(_BUCKET))
-                .write.mode("overwrite")
-                .partitionBy(_BUCKET)
-                .parquet(tmp)
-            )
-        else:
-            df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(os.path.join(final, "_SUCCESS")):
-            shutil.rmtree(tmp)  # lost a race with a concurrent replay
-            return
-        os.replace(tmp, final)
+    def _write(self, df: DataFrame, path: str) -> None:
+        # one task per bucket → ≤ num_buckets files per commit (a
+        # partitionBy write without the repartition writes
+        # tasks × buckets small files)
+        (
+            df.repartition(self.num_buckets, F.col(_BUCKET))
+            .write.mode("overwrite")
+            .partitionBy(_BUCKET)
+            .parquet(path)
+        )
 
     def _bucket_expr(self, cols: list[str]):
         return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(self.num_buckets)).cast(
@@ -145,8 +167,6 @@ class SnapshotStateTable:
         dirs: list[tuple[str, int]],
         buckets: list[int] | None = None,
         keys_df: DataFrame | None = None,
-        keep_bucket: bool = False,
-        before_batch: int | None = None,
         keep_meta: bool = False,
     ) -> DataFrame | None:
         """Latest-batch-wins per key across base + deltas; tombstones drop.
@@ -155,14 +175,6 @@ class SnapshotStateTable:
         ``bucket_by``) additionally semi-join-filters to the requested keys
         before the merge-on-read window — both keep the resolve O(touched
         state) instead of O(total state).
-
-        ``before_batch`` pins the read to the state as of BEFORE that batch
-        (rows stamped ``_BATCH < before_batch``) — the Iceberg
-        snapshot-as-of analogue. Used for pre-commit snapshot reads inside a
-        batch: a no-op on the original run (the table holds nothing from the
-        in-flight batch yet) and exactly the pre-batch state under replay
-        after a mid-batch crash. Requires compaction to preserve original
-        ``_BATCH`` stamps (it does — see ``apply_delta``).
 
         ``keep_meta`` keeps the ``_OP``/``_BATCH``/``_BUCKET`` columns in
         the output (compaction needs the original stamps)."""
@@ -177,7 +189,7 @@ class SnapshotStateTable:
             self._dir(kind, b)
             for kind, b in live
             if _has_parquet(self._dir(kind, b))
-            # empty deltas (no rows in any bucket) are schema-free markers
+            # a delta with no rows in any bucket holds no parquet file
         ]
         if not paths:
             return None
@@ -201,9 +213,7 @@ class SnapshotStateTable:
             df = parts[0]
             for p in parts[1:]:
                 df = df.unionByName(p)
-        if before_batch is not None:
-            df = df.filter(F.col(_BATCH) < F.lit(before_batch))
-        if buckets is not None and _BUCKET in df.columns:
+        if buckets is not None:
             df = df.filter(F.col(_BUCKET).isin(buckets))  # partition pruning
         if keys_df is not None:
             on = [f"_k_{c}" for c in self.bucket_by]
@@ -225,7 +235,7 @@ class SnapshotStateTable:
             self.scan_stats["read_rows"] += df.count()
             self.scan_stats["read_calls"] += 1
         keys = [c for c in df.columns if c.startswith("_k_")]
-        drop = set() if keep_meta else ({_OP, _BATCH} | (set() if keep_bucket else {_BUCKET}))
+        drop = set() if keep_meta else {_OP, _BATCH, _BUCKET}
         w_cols = [c for c in df.columns if c not in drop]
         w = Window.partitionBy(*keys).orderBy(F.col(_BATCH).desc())
         return (
@@ -240,19 +250,15 @@ class SnapshotStateTable:
                 out = out.withColumnRenamed(c, c[3:])
         return out
 
-    def read(self, before_batch: int | None = None) -> DataFrame | None:
-        """Current FULL state (latest committed view), or None if empty.
+    def read(self) -> DataFrame | None:
+        """Current FULL state (latest visible view), or None if empty.
         O(total state) — for final results / compaction, or small whole-read
         tables (e.g. the music job's dirty-block set), not per-batch use on
         large state.
 
-        ``before_batch`` pins to the pre-batch snapshot exactly as in
-        :meth:`read_for` — required when the result feeds deltas committed
-        later in the same batch.
-
         Key columns come back under their original names (the ``_k_``
         prefix is internal)."""
-        out = self._resolve(self._committed_dirs(), before_batch=before_batch)
+        out = self._resolve(self._visible_dirs())
         return None if out is None else self._unprefix(out)
 
     def bucket_ids_for(self, keys_df: DataFrame) -> list[int]:
@@ -261,7 +267,6 @@ class SnapshotStateTable:
         a subset of the same) key values compute this once and pass it to
         ``read_for(buckets=...)``: the bucket id depends only on the key
         VALUES and the bucket count, not on the table."""
-        assert self.bucket_by, "bucket_ids_for requires a bucket_by declaration"
         return [
             r[0]
             for r in keys_df.select(
@@ -272,10 +277,7 @@ class SnapshotStateTable:
         ]
 
     def read_for(
-        self,
-        keys_df: DataFrame,
-        before_batch: int | None = None,
-        buckets: list[int] | None = None,
+        self, keys_df: DataFrame, buckets: list[int] | None = None
     ) -> DataFrame | None:
         """Pruned state read: only rows whose ``bucket_by`` key appears in
         ``keys_df`` (whose columns must be exactly ``bucket_by``). Partition
@@ -283,32 +285,22 @@ class SnapshotStateTable:
         limits resolved rows to the requested keys — per-batch read cost is
         O(keys touched), independent of total state size.
 
-        ``before_batch=b`` pins to the pre-batch-``b`` snapshot — REQUIRED
-        for every read whose result feeds deltas committed later in the same
-        batch (replay after a mid-batch crash would otherwise see the
-        already-committed post-state and derive empty/doubled deltas).
-
         ``buckets`` (from :meth:`bucket_ids_for`, possibly computed on a
         SUPERSET of these keys against the same bucket count) skips the
         per-call bucket-id job — the driver-overhead fusion the streaming
         kernel uses to keep Spark jobs per micro-batch low."""
-        assert self.bucket_by, "read_for requires a bucket_by declaration"
         ids = buckets if buckets is not None else self.bucket_ids_for(keys_df)
         if not ids:
             return None
-        out = self._resolve(
-            self._committed_dirs(), buckets=ids, keys_df=keys_df, before_batch=before_batch
-        )
+        out = self._resolve(self._visible_dirs(), buckets=ids, keys_df=keys_df)
         return None if out is None else self._unprefix(out)
 
     # -- writes ---------------------------------------------------------------
 
     def _tag(self, df: DataFrame, keys: list[str], batch_id: int, op: str) -> DataFrame:
-        out = df
-        if self.bucket_by:
-            missing = [c for c in self.bucket_by if c not in df.columns]
-            assert not missing, f"bucket_by columns {missing} absent (must be ⊆ keys)"
-            out = out.withColumn(_BUCKET, self._bucket_expr(self.bucket_by))
+        missing = [c for c in self.bucket_by if c not in df.columns]
+        assert not missing, f"bucket_by columns {missing} absent (must be ⊆ keys)"
+        out = df.withColumn(_BUCKET, self._bucket_expr(self.bucket_by))
         for k in keys:
             out = out.withColumnRenamed(k, f"_k_{k}")
         return out.withColumn(_OP, F.lit(op)).withColumn(_BATCH, F.lit(batch_id))
@@ -320,11 +312,9 @@ class SnapshotStateTable:
         keys: list[str],
         batch_id: int,
     ) -> None:
-        """Commit one micro-batch's changes: ``upserts`` replace their keys,
+        """Write one micro-batch's changes: ``upserts`` replace their keys,
         ``deletes`` (key columns only) tombstone theirs. O(batch) bytes.
-        Idempotent per batch_id."""
-        if self.committed(batch_id):
-            return
+        Visible to other readers once the batch's marker commits."""
         parts = []
         if upserts is not None:
             parts.append(self._tag(upserts.dropDuplicates(keys), keys, batch_id, "u"))
@@ -338,7 +328,7 @@ class SnapshotStateTable:
         delta = parts[0]
         for p in parts[1:]:
             delta = delta.unionByName(p, allowMissingColumns=True)
-        dirs = self._committed_dirs()
+        dirs = self._visible_dirs()
         base_ix = max((i for i, (k, _) in enumerate(dirs) if k == "b"), default=-1)
         n_deltas = len(dirs) - base_ix - 1
         if n_deltas + 1 >= self.compact_every:
@@ -346,16 +336,14 @@ class SnapshotStateTable:
             # (Iceberg rewrite_data_files) — the amortized O(state)
             # maintenance write, accounted under compact_rows.
             #
-            # The base preserves ORIGINAL _BATCH stamps and keeps this
-            # batch's delta rows (incl. tombstones) alongside the pre-batch
-            # state: merge-on-read still picks the latest row per key, and a
-            # version-pinned read (_BATCH < batch_id) recovers the exact
-            # pre-batch snapshot — required for crash/replay correctness of
-            # pre-commit snapshot reads (see read_for). The retained
-            # pre-images (one per key touched this batch) fold away at the
-            # next compaction.
+            # The base keeps each row's ORIGINAL _BATCH stamp and holds this
+            # batch's delta rows (incl. tombstones) beside the resolved
+            # history: the stamps order the delta after history, so
+            # merge-on-read still picks the latest row per key. The
+            # superseded rows (one per key touched this batch) fold away at
+            # the next compaction.
             track, self.track_scans = self.track_scans, False
-            prev = self._resolve(dirs, keep_bucket=True, keep_meta=True)
+            prev = self._resolve(dirs, keep_meta=True)
             self.track_scans = track
             if prev is not None and self.track_scans:
                 self.scan_stats["compact_rows"] += prev.count()
@@ -363,38 +351,19 @@ class SnapshotStateTable:
                 base = delta
             else:
                 base = prev.unionByName(delta, allowMissingColumns=True)
-            self._atomic_write(base, self._dir("b", batch_id))
+            self._write(base, self._dir("b", batch_id))
         else:
-            self._atomic_write(delta, self._dir("d", batch_id))
+            self._write(delta, self._dir("d", batch_id))
 
     def upsert(self, new_rows: DataFrame, keys: list[str], batch_id: int) -> None:
         """MERGE: new rows win per key."""
         self.apply_delta(new_rows, None, keys, batch_id)
 
-    def commit_unchanged(self, batch_id: int) -> None:
-        """Mark a batch committed with zero data movement: a marker delta
-        directory holding only ``_SUCCESS`` (no parquet). ``_resolve`` skips
-        parquet-free directories, so readers never touch it — and unlike the
-        old empty-parquet write, this costs ZERO Spark jobs (it is pure
-        filesystem; empty batches previously paid ~2 small jobs per table)."""
-        if self.committed(batch_id):
-            return
-        tmp = self._dir("d", batch_id) + ".tmp"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        os.makedirs(tmp)
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        final = self._dir("d", batch_id)
-        if os.path.exists(os.path.join(final, "_SUCCESS")):
-            shutil.rmtree(tmp)
-            return
-        os.replace(tmp, final)
-
     def prune(self, keep_last: int = 3) -> None:
         """Drop history superseded by the newest base snapshot (Iceberg
         expire_snapshots analogue): everything older than the latest base,
         keeping at least ``keep_last`` committed versions."""
-        dirs = self._committed_dirs()
+        dirs = self._visible_dirs()
         base_ix = max(
             (i for i, (k, _) in enumerate(dirs) if k == "b"), default=None
         )

@@ -41,8 +41,8 @@ untyped→Settlement type default ONLY to VERTEX_ADDITION waves, not to the
 initial wave — the geo job reproduces that with ``batch_id > 0``
 (``MultiIncrementalClusteringFunction.java:92-103``).
 
-State tables (``SnapshotStateTable`` — bucket-partitioned, delta-committed,
-version-pinned; the Iceberg merge-on-read stand-in of ``streaming/sinks``):
+State tables (``SnapshotStateTable`` — bucket-partitioned, delta-committed;
+the Iceberg merge-on-read stand-in of ``streaming/sinks``):
 
 * ``reps``        (cluster_rid) — current representatives (the domain's
   representative schema, always with ``members``)
@@ -50,16 +50,13 @@ version-pinned; the Iceberg merge-on-read stand-in of ``streaming/sinks``):
   pruned path from a dirty label to its representative ids
 * ``assignments`` (rid) — record → cluster, the exactly-once output sink
 * ``dirty``       (block) — labels to re-examine next wave (small: shrinks
-  to ∅ at fixpoint; read whole, version-pinned)
+  to ∅ at fixpoint; read whole)
 
-Commits run in the order ``reps`` → ``rep_blocks`` → ``assignments`` →
-``dirty``; ``dirty`` commits last and is the batch's replay gate. Every read
-that feeds a later commit is pinned ``before_batch`` and every commit is
-idempotent per ``batch_id``, so a kill at any inter-commit boundary replays
-to the identical state. The replay gate, batch prologue, empty-batch markers,
-pruning, ``metrics.jsonl`` and stream wiring are ``streaming/job.py``'s
-``ExactlyOnceJob``, shared with the transcript job (whose crash points
-``tests/test_streaming_crash_replay.py`` proves the same way).
+The four tables of a wave become visible together through the job's one
+commit marker, so a kill at any point replays to the identical state. The
+commit marker and replay gate, batch prologue, pruning, ``metrics.jsonl``
+and stream wiring are ``streaming/job.py``'s ``ExactlyOnceJob``, shared with
+the transcript job.
 """
 
 from __future__ import annotations
@@ -89,7 +86,6 @@ class RepresentativeWaveJob(ExactlyOnceJob):
     rep_schema: str  # DDL of the ``reps`` table, keyed ``cluster_rid``
     label_col: str
     key = ["rid"]
-    # ``dirty`` commits last: the batch's replay gate
     tables = [
         ("reps", ["cluster_rid"]),
         ("rep_blocks", ["block"]),
@@ -119,9 +115,8 @@ class RepresentativeWaveJob(ExactlyOnceJob):
         singles = self._singles(batch_df, batch_id)
 
         # dirty labels = this wave's singleton labels ∪ labels left dirty by
-        # the previous wave's merges (pinned: replay must not see this
-        # batch's own dirty commit)
-        prev_dirty = self.dirty.read(before_batch=batch_id)
+        # the previous wave's merges
+        prev_dirty = self.dirty.read()
         if prev_dirty is None:
             prev_dirty = self._empty("block string")
         touched = (
@@ -132,12 +127,12 @@ class RepresentativeWaveJob(ExactlyOnceJob):
         )
 
         # pruned path to the affected representatives: posting list → ids →
-        # rep rows (both pinned — they feed this batch's deltas)
-        post = self.rep_blocks.read_for(touched, before_batch=batch_id)
+        # rep rows
+        post = self.rep_blocks.read_for(touched)
         if post is None:
             post = self._empty("block string, cluster_rid long")
         rep_ids = post.select("cluster_rid").distinct()
-        reps_tchd = self.reps.read_for(rep_ids, before_batch=batch_id)
+        reps_tchd = self.reps.read_for(rep_ids)
         if reps_tchd is None:
             reps_tchd = self._empty(self.rep_schema)
         workset = reps_tchd.unionByName(singles).localCheckpoint(eager=False)

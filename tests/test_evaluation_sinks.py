@@ -5,7 +5,7 @@ from __future__ import annotations
 import os
 
 from mapping_analysis_spark.operators.evaluation import cluster_pairs, pair_quality
-from mapping_analysis_spark.streaming.sinks import SnapshotStateTable
+from mapping_analysis_spark.streaming.sinks import CommitLog, SnapshotStateTable
 
 
 def test_cluster_pairs_explosion(spark):
@@ -31,35 +31,49 @@ def test_pair_quality_counts(spark):
 
 
 def test_snapshot_state_table_exactly_once(spark, tmp_path):
-    st = SnapshotStateTable(spark, str(tmp_path), "t", compact_every=3)
-    df1 = spark.createDataFrame([("k1", 1), ("k2", 2)], ["k", "v"])
-    st.upsert(df1, ["k"], batch_id=0)
-    # replay of batch 0 with different data must be a no-op (already committed)
-    df_replay = spark.createDataFrame([("k1", 99)], ["k", "v"])
-    st.upsert(df_replay, ["k"], batch_id=0)
-    got = {(r["k"], r["v"]) for r in st.read().collect()}
-    assert got == {("k1", 1), ("k2", 2)}
+    """A batch shows once its marker commits; ``discard`` deletes an
+    uncommitted batch; merge-on-read, tombstones, compaction and prune work
+    on committed batches."""
+    log = CommitLog(str(tmp_path))
+    st = SnapshotStateTable(spark, log, "t", ["k"], compact_every=3)
+
+    def view():
+        return {(r["k"], r["v"]) for r in st.read().collect()}
+
+    st.upsert(spark.createDataFrame([("k1", 1), ("k2", 2)], ["k", "v"]), ["k"], 0)
+    assert st.versions() == [] and st.read() is None  # no marker yet
+    log.commit(0)
+    assert view() == {("k1", 1), ("k2", 2)}
+    # a killed attempt of batch 1 stays invisible; discard deletes it
+    st.upsert(spark.createDataFrame([("k1", 99)], ["k", "v"]), ["k"], 1)
+    assert st.versions() == [0] and view() == {("k1", 1), ("k2", 2)}
+    st.discard()
+    assert os.listdir(st.root) == ["d0000000000"]
     # batch 1 upserts k1 and adds k3
-    df2 = spark.createDataFrame([("k1", 10), ("k3", 3)], ["k", "v"])
-    st.upsert(df2, ["k"], batch_id=1)
-    got = {(r["k"], r["v"]) for r in st.read().collect()}
-    assert got == {("k1", 10), ("k2", 2), ("k3", 3)}
+    st.upsert(spark.createDataFrame([("k1", 10), ("k3", 3)], ["k", "v"]), ["k"], 1)
+    log.commit(1)
+    assert view() == {("k1", 10), ("k2", 2), ("k3", 3)}
     assert st.versions() == [0, 1]
     # batch 2: delete tombstone for k2 — also triggers compaction
     # (compact_every=3) → a fresh base snapshot b2
-    dels = spark.createDataFrame([("k2",)], ["k"])
-    st.apply_delta(None, dels, ["k"], batch_id=2)
-    got = {(r["k"], r["v"]) for r in st.read().collect()}
-    assert got == {("k1", 10), ("k3", 3)}
-    # empty commits keep replay detection monotonic at zero data cost
-    st.commit_unchanged(3)
-    assert st.committed(3)
-    assert {(r["k"], r["v"]) for r in st.read().collect()} == got
+    st.apply_delta(None, spark.createDataFrame([("k2",)], ["k"]), ["k"], 2)
+    log.commit(2)
+    want = {("k1", 10), ("k3", 3)}
+    assert view() == want
+    assert "b0000000002" in os.listdir(st.root)
+    # an empty batch writes only the marker
+    log.commit(3)
+    assert st.versions() == [0, 1, 2] and view() == want
     # prune drops history superseded by the base snapshot
     st.prune(keep_last=1)
-    assert st.versions() == [2, 3]
-    # state still resolves identically after pruning
-    assert {(r["k"], r["v"]) for r in st.read().collect()} == got
+    assert st.versions() == [2]
+    assert view() == want
+    # the in-flight batch sees its own writes before its marker
+    log.in_flight = 4
+    st.upsert(spark.createDataFrame([("k4", 4)], ["k", "v"]), ["k"], 4)
+    assert view() == want | {("k4", 4)}
+    log.in_flight = None
+    assert view() == want
 
 
 def test_upsert_writes_are_delta_sized(spark, tmp_path):
@@ -67,7 +81,8 @@ def test_upsert_writes_are_delta_sized(spark, tmp_path):
     the Iceberg MERGE cost model this table stands in for."""
     from pyspark.sql import functions as F
 
-    st = SnapshotStateTable(spark, str(tmp_path), "t", compact_every=1000)
+    log = CommitLog(str(tmp_path))
+    st = SnapshotStateTable(spark, log, "t", ["k"], compact_every=1000)
     big = spark.range(20000).select(
         F.col("id").cast("string").alias("k"), F.col("id").alias("v")
     )
@@ -76,6 +91,7 @@ def test_upsert_writes_are_delta_sized(spark, tmp_path):
         F.col("id").cast("string").alias("k"), (F.col("id") + 1_000_000).alias("v")
     )
     st.upsert(small, ["k"], batch_id=1)
+    log.commit(1)
 
     def dir_bytes(d):
         return sum(
@@ -97,9 +113,10 @@ def test_bucketed_state_table_pruned_reads(spark, tmp_path):
     touched buckets (Iceberg bucket-partition pruning analogue)."""
     from pyspark.sql import functions as F
 
+    log = CommitLog(str(tmp_path))
     st = SnapshotStateTable(
-        spark, str(tmp_path), "bt", bucket_by=["k"], num_buckets=8,
-        track_scans=True, compact_every=1000,
+        spark, log, "bt", ["k"], num_buckets=8, track_scans=True,
+        compact_every=1000,
     )
     df = spark.range(200).select(
         F.concat(F.lit("k"), F.col("id")).alias("k"), F.col("id").alias("v")
@@ -108,6 +125,7 @@ def test_bucketed_state_table_pruned_reads(spark, tmp_path):
     # update a few keys in a second delta — merge-on-read must resolve
     upd = spark.createDataFrame([("k5", 500), ("k7", 700)], ["k", "v"])
     st.upsert(upd, ["k"], batch_id=1)
+    log.commit(1)
     keys = spark.createDataFrame([("k5",), ("k7",), ("k123",)], ["k"])
     got = {(r["k"], r["v"]) for r in st.read_for(keys).collect()}
     assert got == {("k5", 500), ("k7", 700), ("k123", 123)}
@@ -115,6 +133,7 @@ def test_bucketed_state_table_pruned_reads(spark, tmp_path):
     assert 0 < st.scan_stats["read_rows"] <= 60, st.scan_stats
     # deletes tombstone within the right bucket
     st.apply_delta(None, spark.createDataFrame([("k5",)], ["k"]), ["k"], 2)
+    log.commit(2)
     got = {(r["k"], r["v"]) for r in st.read_for(keys).collect()}
     assert got == {("k7", 700), ("k123", 123)}
     # full read still resolves everything

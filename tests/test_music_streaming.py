@@ -218,13 +218,18 @@ def _music_state(job):
 
 @pytest.fixture(scope="module")
 def music_ref_state(spark, tmp_path_factory):
-    """Full state of the uninterrupted run over ``_music_waves``."""
+    """Full state of the uninterrupted run over ``_music_waves``, and a copy of
+    its state after wave 0, on which every crash point restarts."""
     from mapping_analysis_spark.streaming.wave_job import MusicIncrementalJob
 
-    ref = MusicIncrementalJob(spark, str(tmp_path_factory.mktemp("music_ref")))
+    root = str(tmp_path_factory.mktemp("music_ref"))
+    after0 = str(tmp_path_factory.mktemp("music_ref_after0") / "state")
+    ref = MusicIncrementalJob(spark, root)
     for i, w in enumerate(_music_waves(spark)):
         ref.process_batch(w, i)
-    return _music_state(ref)
+        if i == 0:
+            shutil.copytree(root, after0)
+    return _music_state(ref), after0
 
 
 def test_music_synthetic_waves_stream_to_batch_parity(spark, tmp_path):
@@ -271,26 +276,31 @@ def test_music_synthetic_waves_stream_to_batch_parity(spark, tmp_path):
     }
 
 
-@pytest.mark.parametrize("crash_at", ["reps", "rep_blocks", "assignments", "dirty"])
+@pytest.mark.parametrize(
+    "crash_at", ["reps", "rep_blocks", "assignments", "dirty", "marker"]
+)
 def test_music_job_mid_batch_crash_replay(spark, tmp_path, crash_at, music_ref_state):
-    """Kill music batch 1 just before the ``crash_at`` table commits;
-    replay + batch 2 must converge to the uninterrupted run's full state
-    (the version-pinned pre-commit reads at work on the music commit
-    order reps → rep_blocks → assignments → dirty)."""
+    """Kill music batch 1 just before the ``crash_at`` table writes (write
+    order reps → rep_blocks → assignments → dirty; ``marker``: after every
+    table write, before the commit marker); replay + batch 2 must converge
+    to the uninterrupted run's full state."""
     from mapping_analysis_spark.streaming.wave_job import MusicIncrementalJob
 
     waves = _music_waves(spark)
-    want = music_ref_state
+    want, after0 = music_ref_state
 
+    shutil.copytree(after0, str(tmp_path / "crash"))
     job = MusicIncrementalJob(spark, str(tmp_path / "crash"))
-    job.process_batch(waves[0], 0)
-    victim = getattr(job, crash_at)
-    orig = victim.apply_delta
-    victim.apply_delta = _boom
+    victim, method = (
+        (job.commits, "commit")
+        if crash_at == "marker"
+        else (getattr(job, crash_at), "apply_delta")
+    )
+    setattr(victim, method, _boom)
     with pytest.raises(_Boom):
         job.process_batch(waves[1], 1)
-    victim.apply_delta = orig
-    assert not victim.committed(1)
+    delattr(victim, method)
+    assert all(1 not in st.versions() for st in job._tables)
     job.process_batch(waves[1], 1)  # replay
     job.process_batch(waves[2], 2)
     got = _music_state(job)

@@ -1,18 +1,18 @@
 """Mid-batch crash + replay correctness.
 
 The exactly-once contract ("killed at ANY point, resume produces the
-identical final table") is only honest if a crash BETWEEN state-table
-commits of one micro-batch replays correctly: the batch's snapshot reads
-(pre-upsert records, pre-delta block sizes, pre-delta incident edges,
-pre-recompute component membership) must not observe the partially
-committed post-state, or replay derives empty/doubled deltas and the state
-diverges forever after. The fix is version-pinned reads
-(``read_for(..., before_batch=batch_id)``) backed by stamp-preserving
-compaction — these tests kill the kernel at every inter-commit boundary and
-assert the resumed run converges to the uninterrupted result.
+identical final table") rests on one commit marker per micro-batch: a crash
+after any subset of a batch's table writes leaves no table exposing that
+batch, and the replay discards those writes and re-derives them from the
+pre-batch state. These tests kill the kernel before each table write and
+after every table write but before the marker, and assert the resumed run
+converges to the uninterrupted result.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -63,23 +63,42 @@ def _boom(*a, **kw):
     raise _Boom()
 
 
+def _crash(job, crash_at, batch, batch_id):
+    """Run ``batch`` with the ``crash_at`` table's write (``"marker"``: the
+    commit marker) raising; afterwards no table exposes the batch."""
+    victim, method = (
+        (job.commits, "commit")
+        if crash_at == "marker"
+        else (getattr(job, crash_at), "apply_delta")
+    )
+    setattr(victim, method, _boom)
+    with pytest.raises(_Boom):
+        job.process_batch(batch, batch_id)
+    delattr(victim, method)
+    assert all(batch_id not in st.versions() for st in job._tables)
+
+
 @pytest.fixture(scope="module")
 def reference_run(spark, transcripts_smoke, tmp_path_factory):
     """Uninterrupted 3-batch run — the convergence target for every crash
-    point."""
-    ref = IncrementalClusteringJob(
-        spark, str(tmp_path_factory.mktemp("ref_state"))
-    )
+    point — and a copy of its state after batch 0, on which every crash
+    point restarts (batch 0 runs once per module)."""
+    state = str(tmp_path_factory.mktemp("ref_state"))
+    after0 = str(tmp_path_factory.mktemp("after0") / "state")
+    ref = IncrementalClusteringJob(spark, state)
     for i, b in enumerate(_batches(transcripts_smoke)):
         ref.process_batch(b, i)
-    return _assign_set(ref.result()), _state_fingerprint(ref)
+        if i == 0:
+            shutil.copytree(state, after0)
+    return _assign_set(ref.result()), _state_fingerprint(ref), after0
 
 
-# every state table committed strictly after `records` in the per-batch
-# commit order — a crash before each one leaves a distinct partial prefix
+# every state table written strictly after `records` — a crash before each
+# one leaves a distinct set of written tables — and the commit marker, after
+# every table write
 CRASH_POINTS = [
     "blocks", "bands", "block_sizes", "edges", "node_comp", "comp_members",
-    "assignments",
+    "assignments", "marker",
 ]
 
 
@@ -87,23 +106,17 @@ CRASH_POINTS = [
 def test_mid_batch_crash_replay_converges(
     spark, transcripts_smoke, tmp_path, reference_run, crash_at
 ):
-    """Kill batch 1 just before the ``crash_at`` table commits (everything
-    ordered earlier IS committed), replay it, run batch 2 — final state of
+    """Kill batch 1 just before the ``crash_at`` table writes (every table
+    written earlier has written), replay it, run batch 2 — final state of
     every table must equal the uninterrupted run's."""
-    want_assign, want_state = reference_run
+    want_assign, want_state, after0 = reference_run
     batches = _batches(transcripts_smoke)
 
+    shutil.copytree(after0, str(tmp_path / "crash"))
     job = IncrementalClusteringJob(spark, str(tmp_path / "crash"))
-    job.process_batch(batches[0], 0)
-    victim = getattr(job, crash_at)
-    orig = victim.apply_delta
-    victim.apply_delta = _boom
-    with pytest.raises(_Boom):
-        job.process_batch(batches[1], 1)
-    victim.apply_delta = orig
-    # the victim table must NOT be committed, records (upstream) must be
-    assert not victim.committed(1)
-    assert job.records.committed(1)
+    _crash(job, crash_at, batches[1], 1)
+    # the killed attempt's upstream writes are on disk, yet invisible
+    assert "d0000000001" in os.listdir(job.records.root)
     job.process_batch(batches[1], 1)  # replay
     job.process_batch(batches[2], 2)
 
@@ -114,9 +127,9 @@ def test_mid_batch_crash_replay_converges(
 
 
 def test_mid_batch_crash_replay_with_compaction(spark, transcripts_smoke, tmp_path):
-    """Crash mid-batch right after the records table COMPACTED (base
-    rewrite): the pinned pre-batch reads must survive the rewrite — this is
-    what stamp-preserving compaction guarantees."""
+    """Crash mid-batch when every table compacts every 2 batches (base
+    rewrites in the history the replay reads): the replay must still
+    converge."""
     batches = _batches(transcripts_smoke, 4)
 
     def mk(tag):
@@ -128,18 +141,13 @@ def test_mid_batch_crash_replay_with_compaction(spark, transcripts_smoke, tmp_pa
     ref = mk("ref")
     for i, b in enumerate(batches):
         ref.process_batch(b, i)
+        if i == 1:
+            shutil.copytree(str(tmp_path / "ref"), str(tmp_path / "crash"))
     want = _assign_set(ref.result())
     want_state = _state_fingerprint(ref)
 
-    job = mk("crash")
-    for i in (0, 1):
-        job.process_batch(batches[i], i)
-    orig = job.blocks.apply_delta
-    job.blocks.apply_delta = _boom
-    with pytest.raises(_Boom):
-        job.process_batch(batches[2], 2)
-    job.blocks.apply_delta = orig
-    assert job.records.committed(2) and not job.blocks.committed(2)
+    job = mk("crash")  # restarts on the reference's state after batch 1
+    _crash(job, "blocks", batches[2], 2)
     job.process_batch(batches[2], 2)
     job.process_batch(batches[3], 3)
 

@@ -106,19 +106,22 @@ def test_streaming_resume_from_checkpoint(spark, transcripts_smoke, arrival_dir,
 
 
 def test_batch_replay_is_idempotent(spark, transcripts_smoke, tmp_path):
-    """Re-invoking the kernel with an already-committed batch_id is a no-op."""
+    """Re-invoking the kernel with an already-committed batch_id is a no-op;
+    an empty batch writes only the commit marker."""
     state = str(tmp_path / "state_idem")
     job = IncrementalClusteringJob(spark, state)
     batch = transcripts_smoke.limit(500)
     job.process_batch(batch, 0)
-    v0 = job.assignments.latest_version()
     before = _assign_set(job.result())
     job.process_batch(batch, 0)  # replay
-    assert job.assignments.latest_version() == v0
+    job.process_batch(batch.limit(0), 1)  # empty batch
+    job.process_batch(batch.limit(0), 1)  # its replay
+    assert all(st.versions() == [0] for st in job._tables)
     assert _assign_set(job.result()) == before
-    # one metrics.jsonl schema for every line, the replayed one included
+    # one metrics.jsonl schema for every line, the replayed ones included
     lines = [json.loads(x) for x in open(job.metrics_path)]
-    assert [x["replayed"] for x in lines] == [False, True]
+    assert [x["replayed"] for x in lines] == [False, True, False, True]
+    assert lines[2]["rows"] == 0
     keys = {
         "batch_id", "rows", "seconds", "rows_per_sec", "replayed",
         "lineage_files", "spark_jobs",
